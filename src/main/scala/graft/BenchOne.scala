@@ -1,10 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: time ONE OR MORE registry queries at the Bench harness's
-  * settings (same conf keys AND the same `SPARK_GRAFT_CPUS` default, so
-  * the two tools never silently disagree on parallelism — pass
+  * settings (both build their session through [[Sessions]], so the two
+  * tools never silently disagree on conf or parallelism — pass
   * `SPARK_GRAFT_CPUS=32` to match the official sf0.1 capture
   * convention) without paying the full headline sweep — the
   * iterate-on-one-query loop the README's capture convention assumes.
@@ -20,17 +18,7 @@ object BenchOne {
     require(args.nonEmpty, "usage: BenchOne <query>[,<query>...]")
     val names = args(0).split(',').toSeq.filter(_.nonEmpty)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4") // Bench's default
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     val registry = SparkEntry.queries
     val missing = names.filterNot(registry.contains)
     require(missing.isEmpty, s"unknown queries: ${missing.mkString(",")}")

@@ -206,7 +206,7 @@ object AggStore {
             Snapshot.listKvDirs(spark, s"$path/$dir", "bucket").map((_, dir))))
       // freshness fingerprint AFTER the commit ([[BaseFiles]])
       BaseFiles.record(spark, path, increment.inputFiles.toSeq)
-    } finally freeCheckpoint(delta)
+    } finally GenStore.freeLocal(delta)
   }
 
   /** Is there a committed store at `path`? (The streaming sink's
@@ -352,16 +352,9 @@ object AggStore {
                 .map((_, dir))))
         GenStore.purgeCommitted(spark, path)
         deleted
-      } finally freeCheckpoint(keep)
-    } finally freeCheckpoint(k)
+      } finally GenStore.freeLocal(keep)
+    } finally GenStore.freeLocal(k)
   }
-
-  private def freeCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed match {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(false)
-      case _ => ()
-    }
 
   /** Pointer-only ROLLBACK to an archived generation ([[GenStore
     * .rollback]]): "undo yesterday's bad load" — the state AND the

@@ -596,7 +596,7 @@ object Dedup {
     if (!landed) {
       val snap = src.localCheckpoint(true)
       try snap.write.partitionBy("bucket").mode("overwrite").parquet(d1)
-      finally freeLocalCheckpoint(snap)
+      finally GenStore.freeLocal(snap)
     }
     GenStore.write(spark, path, GenStore.Manifest(1L, nBuckets, Seq.empty,
       listBucketDirs(spark, d1).map((_, "d1"))))
@@ -714,8 +714,8 @@ object Dedup {
           GenStore.Manifest(manifest.gen + 1, nBuckets, manifest.applied,
             manifest.entries.filterNot(e => touched.contains(e._1)) ++
               listBucketDirs(spark, s"$path/$dir").map((_, dir))))
-      } finally freeLocalCheckpoint(merged)
-    } finally freeLocalCheckpoint(np)
+      } finally GenStore.freeLocal(merged)
+    } finally GenStore.freeLocal(np)
   }
 
   /** Retention GC for the cluster store: keep the CURRENT snapshot plus
@@ -831,10 +831,10 @@ object Dedup {
                   listBucketDirs(spark, s"$path/$dir").map((_, dir))))
             GenStore.purgeCommitted(spark, path)
             deleted
-          } finally freeLocalCheckpoint(relabeled)
-        } finally freeLocalCheckpoint(compRows)
-      } finally freeLocalCheckpoint(affected)
-    } finally freeLocalCheckpoint(idsd)
+          } finally GenStore.freeLocal(relabeled)
+        } finally GenStore.freeLocal(compRows)
+      } finally GenStore.freeLocal(affected)
+    } finally GenStore.freeLocal(idsd)
   }
 
   /** Pointer-only ROLLBACK to an archived generation ([[GenStore
@@ -848,12 +848,6 @@ object Dedup {
   def rollbackClusterStore(spark: org.apache.spark.sql.SparkSession,
                            path: String, gen: Long): Unit =
     GenStore.rollback(spark, path, gen)
-
-  private def freeLocalCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed match {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(false)
-      case _ => ()
-    }
 
   /** End-to-end corpus dedup: MinHash-LSH candidate pairs -> transitive
     * clusters -> keep one representative (lowest id) per cluster. Documents

@@ -657,7 +657,16 @@ private[graft] object GenStore {
     } finally pool.shutdown()
   }
 
-  private[operators] def freeLocal(df: DataFrame): Unit =
+  /** Free a DEAD localCheckpoint's blocks now. Spark reclaims them only
+    * when driver GC collects the Dataset, which on a long suite or loop
+    * leaves block sets pinned in executor storage. Frees ONLY when the frame's
+    * whole plan IS one checkpoint materialization (a bare LogicalRDD —
+    * exactly what `localCheckpoint(true)` returns), so a call on a lazy
+    * frame is a no-op even when its input holds upstream checkpoints
+    * the caller still reads. Callers must only pass frames with no live
+    * lazy readers.
+    */
+  private[graft] def freeLocal(df: DataFrame): Unit =
     df.queryExecution.analyzed match {
       case l: org.apache.spark.sql.execution.LogicalRDD =>
         l.rdd.unpersist(false)

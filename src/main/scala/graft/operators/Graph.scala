@@ -39,62 +39,17 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
-  /** Free a DEAD iteration's localCheckpoint blocks. The eager
-    * checkpoint of the NEXT vector has already materialized from them,
-    * so nothing can read them again — but Spark only reclaims them when
-    * driver GC happens to collect the Dataset, which on a long suite
-    * (or a 1000-executor cluster) leaves `iters` node-sized block sets
-    * pinned in executor storage for the whole query. Frees ONLY when
-    * the frame's whole plan IS one checkpoint materialization
-    * (a bare LogicalRDD — exactly what `localCheckpoint(true)`
-    * returns): a round-1 call on the un-checkpointed init vector is
-    * then a guaranteed no-op even when the CALLER's input pipeline
-    * contains its own upstream localCheckpoints (collecting every
-    * LogicalRDD in the tree would free those too — live blocks the
-    * caller still reads; found by feeding a checkpointed edge list).
-    * Callers must only pass vectors with no live lazy readers (the
-    * rank→rank loops qualify; frontier-style loops do NOT — their next
-    * round lazily re-reads the previous vector).
-    */
-  private def freeDeadCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed match {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(false)
-      case _ => ()
-    }
-
   /** The per-round vector side of an edge join (rank / label / frontier
     * vectors): broadcast it when its row count — counted ONCE by the
-    * caller, node sets and frontiers being round-countable — is under
-    * `spark.graft.graph.broadcastVectorRows` (default 4M rows, a few
-    * hundred MB built — the broadcast comfort bound; set 0 to disable).
+    * caller, node sets and frontiers being round-countable — is at most
+    * 4M rows (a few hundred MB built — the broadcast comfort bound).
     * Broadcasting removes the vector's per-round exchange AND the
     * per-round sort of the cached edge side that a sort-merge join
     * pays; vectors above the gate keep the planner's shuffle join, so
     * cluster-scale graphs are unchanged.
     */
-  private def vecSide(vec: DataFrame, nRows: Long): DataFrame = {
-    val limit = vec.sparkSession.conf
-      .get("spark.graft.graph.broadcastVectorRows", "4000000").toLong
-    if (nRows <= limit) broadcast(vec) else vec
-  }
-
-  /** Rounds to fuse into ONE action between lineage cuts, for loops
-    * where each round's vector has exactly ONE downstream reader (the
-    * next round's edge join) — fusing k rounds executes the same
-    * shuffle work in 1/k the job submissions. MEASURED OFF (default 1):
-    * on the sf0.1 commerce graph, 10-round PPR at k=4 ran 8.2-9.5 s vs
-    * 5.2-6.6 s at k=1 (both broadcast settings) — AQE replans the
-    * deepened plan stage by stage and the per-materialization planning
-    * cost outweighs the saved job submissions. Left conf-selectable
-    * for cluster profiles where job RPC latency dominates planning.
-    * Loops where the vector is read MORE than once per round (a
-    * dangling-mass or normalizer aggregate, a convergence probe, LPA's
-    * self-vote union) must keep k = 1 regardless: a lazy vector's plan
-    * would be duplicated per reader and compound exponentially across
-    * chained rounds.
-    */
-  private def chainRounds(df: DataFrame): Int = df.sparkSession.conf
-    .get("spark.graft.graph.chainRounds", "1").toInt
+  private def vecSide(vec: DataFrame, nRows: Long): DataFrame =
+    if (nRows <= 4000000L) broadcast(vec) else vec
 
   /** Exact triangle counts and degrees per node of an UNDIRECTED graph
     * (direction and duplicates in the input edge list are ignored;
@@ -219,12 +174,6 @@ object Graph {
           ed.count()
           e.unpersist(false)
           var rank = nodes.select(col("node"), lit(init).as("r"))
-          // single-reader loop? only then may rounds chain lazily (see
-          // chainRounds): the dangling share and the convergence probe
-          // are second readers of the round's vector
-          val k = if (nDangling == 0 && epsilon < 0) chainRounds(e) else 1
-          var chk: DataFrame = null
-          var sinceChk = 0
           var i = 1
           var ranIters = 0
           var converged = false
@@ -261,7 +210,7 @@ object Graph {
               else {
                 // dsh keeps `rank` as a lazy reader inside `next`; it MUST
                 // be fully consumed by the eager localCheckpoint(true)
-                // below BEFORE freeDeadCheckpoint(rank) runs (the
+                // below BEFORE GenStore.freeLocal(rank) runs (the
                 // no-live-lazy-readers contract) — a lazy checkpoint here
                 // would read freed blocks.
                 val dsh = rank.join(dangling, Seq("node"), "left_semi")
@@ -272,32 +221,25 @@ object Graph {
                     .select(col("node"), (lit(base) + col("__dsh")).as("c")))
                   .groupBy(col("node")).agg(sum(col("c")).as("r"))
               }
-            // lineage cut every k rounds (k = chainRounds on the single-
-            // reader path, else 1 — see chainRounds): with one reader per
-            // round the chained rounds execute exactly once inside the
-            // k-th checkpoint job, so the edge-join work stays `iters`
-            // while job submissions and vector materializations drop to
-            // iters/k. The dangling/convergence paths read the round's
-            // vector twice and therefore keep the per-round cut (an
-            // every-4th checkpoint THERE replays intervening joins per
-            // extra reader — the r10 12.6s->7.3s regression case).
-            sinceChk += 1
-            if (sinceChk >= k || i == iters) {
-              val materialized = next.localCheckpoint(true)
-              if (epsilon >= 0) {
-                // one exact integer scalar per round, over two checkpointed
-                // node-sized vectors — the dangling-share cost class
-                val maxDelta = materialized
-                  .join(rank.withColumnRenamed("r", "__pr"), "node")
-                  .agg(coalesce(max(abs(col("r") - col("__pr"))), lit(0L)))
-                  .head().getLong(0)
-                converged = maxDelta <= epsilon
-              }
-              if (chk != null) freeDeadCheckpoint(chk)
-              chk = materialized
-              sinceChk = 0
-              rank = materialized
-            } else rank = next
+            // one lineage cut per round. Fusing rounds into one action
+            // measured slower (10-round PPR at sf0.1: 8.2-9.5 s at 4
+            // rounds per cut vs 5.2-6.6 s at 1 — AQE replans the deepened
+            // plan stage by stage), and a vector with a second reader (the
+            // dangling share, the convergence probe) would replay the
+            // fused rounds per reader.
+            val materialized = next.localCheckpoint(true)
+            if (epsilon >= 0) {
+              // one exact integer scalar per round, over two checkpointed
+              // node-sized vectors — the dangling-share cost class
+              val maxDelta = materialized
+                .join(rank.withColumnRenamed("r", "__pr"), "node")
+                .agg(coalesce(max(abs(col("r") - col("__pr"))), lit(0L)))
+                .head().getLong(0)
+              converged = maxDelta <= epsilon
+            }
+            // the previous round's checkpoint; a no-op on the lazy init
+            GenStore.freeLocal(rank)
+            rank = materialized
             ranIters = i
             i += 1
           }
@@ -374,11 +316,6 @@ object Graph {
             e.unpersist(false)
             var rank = nodeSeed.select(col("node"),
               when(col("__is") === 1, lit(init)).otherwise(lit(0L)).as("r"))
-            // single-reader loop iff no dangling mass (the dangling share
-            // is a second reader of the round's vector) — see chainRounds
-            val k = if (nDangling == 0) chainRounds(e) else 1
-            var chk: DataFrame = null
-            var sinceChk = 0
             var i = 1
             while (i <= iters) {
               // the per-node seed-gated base term rides INTO the
@@ -398,7 +335,7 @@ object Graph {
               // __is === 1 instead of being added unconditionally. As in
               // pageRankFixedConverged, dsh makes `rank` a lazy reader of
               // `next`: it must be fully consumed by the eager
-              // localCheckpoint(true) before freeDeadCheckpoint(rank).
+              // localCheckpoint(true) before GenStore.freeLocal(rank).
               val next =
                 if (nDangling == 0)
                   contribs
@@ -417,16 +354,10 @@ object Graph {
                           .otherwise(lit(0L)).as("c")))
                     .groupBy(col("node")).agg(sum(col("c")).as("r"))
                 }
-              // lineage cut every k rounds on the single-reader path —
-              // see pageRankFixedConverged / chainRounds
-              sinceChk += 1
-              if (sinceChk >= k || i == iters) {
-                val materialized = next.localCheckpoint(true)
-                if (chk != null) freeDeadCheckpoint(chk)
-                chk = materialized
-                sinceChk = 0
-                rank = materialized
-              } else rank = next
+              // one lineage cut per round — see pageRankFixedConverged
+              val materialized = next.localCheckpoint(true)
+              GenStore.freeLocal(rank)
+              rank = materialized
               i += 1
             }
             rank
@@ -499,7 +430,7 @@ object Graph {
             .as("m"))
           .select(col("node"), col("m.l").as("label"))
           .localCheckpoint(true)
-        freeDeadCheckpoint(labels)
+        GenStore.freeLocal(labels)
         labels = next
         i += 1
       }
@@ -567,7 +498,7 @@ object Graph {
             .as("m"))
           .select(col("node"), col("m.l").as("label"))
           .localCheckpoint(true)
-        freeDeadCheckpoint(labels)
+        GenStore.freeLocal(labels)
         labels = next
         i += 1
       }
@@ -722,16 +653,16 @@ object Graph {
           .select(col("node"),
             coalesce(col("new_label"), col("label")).as("label"))
           .localCheckpoint(true)
-        freeDeadCheckpoint(dC)
+        GenStore.freeLocal(dC)
         out
       }
 
       var s = 0
       while (s < sweeps) {
         val even = stage(cur, 0)
-        freeDeadCheckpoint(cur)
+        GenStore.freeLocal(cur)
         val odd = stage(even, 1)
-        freeDeadCheckpoint(even)
+        GenStore.freeLocal(even)
         cur = odd
         s += 1
       }
@@ -872,16 +803,16 @@ object Graph {
         .select(col("node"),
           coalesce(col("new_label"), col("label")).as("label"))
         .localCheckpoint(true)
-      freeDeadCheckpoint(sC)
+      GenStore.freeLocal(sC)
       out
     }
 
     var s = 0
     while (s < sweeps) {
       val even = stage(cur, 0)
-      freeDeadCheckpoint(cur)
+      GenStore.freeLocal(cur)
       val odd = stage(even, 1)
-      freeDeadCheckpoint(even)
+      GenStore.freeLocal(even)
       cur = odd
       s += 1
     }
@@ -1033,7 +964,7 @@ object Graph {
         .localCheckpoint(true)
     } finally {
       adj.unpersist(false)
-      freeDeadCheckpoint(und)
+      GenStore.freeLocal(und)
     }
     var l = 2
     var done = false
@@ -1079,17 +1010,17 @@ object Graph {
                 col("w"))
               .groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w"))
               .localCheckpoint(true)
-            freeDeadCheckpoint(cEdges)
+            GenStore.freeLocal(cEdges)
             cEdges = nextEdges
           }
-          freeDeadCheckpoint(sub)
-          freeDeadCheckpoint(cur)
+          GenStore.freeLocal(sub)
+          GenStore.freeLocal(cur)
           cur = next
         } finally adj.unpersist(false)
       }
       l += 1
     }
-    freeDeadCheckpoint(cEdges)
+    GenStore.freeLocal(cEdges)
     cur
   }
 
@@ -1138,7 +1069,7 @@ object Graph {
       .filter(col("u") =!= col("v"))
     // persist (not localCheckpoint) + finally-unpersist: a checkpoint's
     // edge-sized blocks would stay pinned until driver GC — on a score-
-    // every-assignment cadence that leak compounds (the freeDeadCheckpoint
+    // every-assignment cadence that leak compounds (the GenStore.freeLocal
     // lesson). The returned frame is materialized community-sized below,
     // so nothing reads und after the unpersist.
     val und = a0
@@ -1471,7 +1402,7 @@ object Graph {
       .select(col("node"), lit(0L).as("dist"))
       .localCheckpoint(true)
     var frontier = visited.select(col("node"))
-    // dead-set reclamation (see freeDeadCheckpoint): each round's `next`
+    // dead-set reclamation (see GenStore.freeLocal): each round's `next`
     // checkpoint consumes the previous frontier, and the new `visited`
     // checkpoint consumes the old one — both freed at their death point
     // so a deep traversal holds two node-sized block sets, not 2·rounds.
@@ -1492,7 +1423,7 @@ object Graph {
         .join(vecSide(visited.select(col("node")), visitedN),
           Seq("node"), "left_anti")
         .localCheckpoint(true)
-      if (prevFrontier != null) freeDeadCheckpoint(prevFrontier)
+      if (prevFrontier != null) GenStore.freeLocal(prevFrontier)
       val nextN = next.count()
       if (nextN == 0) done = true
       else {
@@ -1501,7 +1432,7 @@ object Graph {
         val grown = visited
           .unionByName(next.select(col("node"), lit(d).as("dist")))
           .localCheckpoint(true)
-        freeDeadCheckpoint(visited)
+        GenStore.freeLocal(visited)
         visited = grown
         frontier = next
         prevFrontier = next
@@ -1557,7 +1488,7 @@ object Graph {
         .filter(col("d") < k).select(col("n"))
         .localCheckpoint(true)
       val weakN = weak.count()
-      if (weakN == 0) { freeDeadCheckpoint(weak); done = true }
+      if (weakN == 0) { GenStore.freeLocal(weak); done = true }
       else {
         rounds += 1
         require(rounds < maxRounds, s"k-core did not converge in $maxRounds rounds")
@@ -1568,8 +1499,8 @@ object Graph {
           .localCheckpoint(true)
         // the old edge set and the weak set are dead once the peel
         // materialized from them
-        freeDeadCheckpoint(cur)
-        freeDeadCheckpoint(weak)
+        GenStore.freeLocal(cur)
+        GenStore.freeLocal(weak)
         cur = peeled
       }
     }
@@ -1629,11 +1560,7 @@ object Graph {
             ed.count()
             e.unpersist(false)
             var rank = nodes.select(col("node"), lit(init).as("r"))
-            // single-reader loop iff no dangling mass — see chainRounds
-            val k = if (nDangling == 0) chainRounds(e) else 1
-            var chk: DataFrame = null
-            var sinceChk = 0
-            for (i <- 1 to iters) {
+            for (_ <- 1 to iters) {
               // base term folded into the contribution aggregate via the
               // node-list union — see pageRankFixedConverged
               val contribs = ed
@@ -1644,7 +1571,7 @@ object Graph {
               // broadcast 1-row aggregate (one action per iteration instead
               // of two — see pageRankFixedConverged). dsh makes `rank` a
               // lazy reader of `next`: it must be fully consumed by the
-              // eager localCheckpoint(true) before freeDeadCheckpoint(rank).
+              // eager localCheckpoint(true) before GenStore.freeLocal(rank).
               val next =
                 if (nDangling == 0)
                   contribs
@@ -1659,16 +1586,10 @@ object Graph {
                       .select(col("node"), (lit(base) + col("__dsh")).as("c")))
                     .groupBy(col("node")).agg(sum(col("c")).as("r"))
                 }
-              // lineage cut every k rounds on the single-reader path —
-              // see pageRankFixedConverged / chainRounds
-              sinceChk += 1
-              if (sinceChk >= k || i == iters) {
-                val materialized = next.localCheckpoint(true)
-                if (chk != null) freeDeadCheckpoint(chk)
-                chk = materialized
-                sinceChk = 0
-                rank = materialized
-              } else rank = next
+              // one lineage cut per round — see pageRankFixedConverged
+              val materialized = next.localCheckpoint(true)
+              GenStore.freeLocal(rank)
+              rank = materialized
             }
             rank
           } finally ed.unpersist(false)
@@ -1716,7 +1637,7 @@ object Graph {
       .select(col("node"), lit(0L).as("dist"))
       .localCheckpoint(true)
     var frontier = dist
-    // dead-set reclamation (see freeDeadCheckpoint / bfsHops): the old
+    // dead-set reclamation (see GenStore.freeLocal / bfsHops): the old
     // dist and the previous round's improved-set are both fully consumed
     // by this round's eager checkpoints before they are freed. Round 1's
     // frontier ALIASES the init dist checkpoint — its only read (the
@@ -1742,7 +1663,7 @@ object Graph {
         .filter(col("old").isNull || col("dist") < col("old"))
         .select(col("node"), col("dist"))
         .localCheckpoint(true)
-      if (prevFrontier != null) freeDeadCheckpoint(prevFrontier)
+      if (prevFrontier != null) GenStore.freeLocal(prevFrontier)
       val improvedN = improved.count()
       if (improvedN == 0) done = true
       else {
@@ -1752,7 +1673,7 @@ object Graph {
         val folded = dist.unionByName(improved)
           .groupBy(col("node")).agg(min(col("dist")).as("dist"))
           .localCheckpoint(true)
-        freeDeadCheckpoint(dist)
+        GenStore.freeLocal(dist)
         dist = folded
         frontier = improved
         prevFrontier = improved
@@ -1810,8 +1731,8 @@ object Graph {
             .select(col("node"), coalesce(col("a"), lit(0L)).as("a"))
             .localCheckpoint(true)
           // the old hub fed aRaw, which aFull's eager checkpoint just
-          // consumed — dead from here (see freeDeadCheckpoint)
-          freeDeadCheckpoint(hub)
+          // consumed — dead from here (see GenStore.freeLocal)
+          GenStore.freeLocal(hub)
           // normalizer folded into the checkpoint job as a broadcast 1-row
           // aggregate over the ALREADY-CHECKPOINTED vector (cheap reread,
           // never the edge join) — one action per half-step instead of
@@ -1826,8 +1747,8 @@ object Graph {
                 "ELSE raise_error('hits: authority mass vanished (no edges?)') END")
               .cast("long").as("a"))
             .localCheckpoint(true)
-          freeDeadCheckpoint(aFull)
-          freeDeadCheckpoint(oldAuth)
+          GenStore.freeLocal(aFull)
+          GenStore.freeLocal(oldAuth)
           val hRaw = e.join(auth.withColumnRenamed("node", "dst"), "dst")
             .groupBy(col("src").as("node")).agg(sum(col("a")).as("h"))
           val hFull = nodes.join(hRaw, Seq("node"), "left")
@@ -1840,7 +1761,7 @@ object Graph {
                 "ELSE raise_error('hits: hub mass vanished (no edges?)') END")
               .cast("long").as("h"))
             .localCheckpoint(true)
-          freeDeadCheckpoint(hFull)
+          GenStore.freeLocal(hFull)
           i += 1
         }
         nodes.join(hub, "node").join(auth, "node")

@@ -1208,7 +1208,7 @@ object Similarity {
       require(fs.rename(new org.apache.hadoop.fs.Path(s"$root/tombstones"),
         new org.apache.hadoop.fs.Path(s"$root/tombhist/g$newGen")),
         s"could not archive the tombstone log to tombhist/g$newGen")
-    } finally freeCheckpoint(tomb)
+    } finally GenStore.freeLocal(tomb)
   }
 
   /** RECALL-TARGETED nProbe tuning — the serving-quality sibling of
@@ -1271,18 +1271,8 @@ object Similarity {
         .getOrElse(rows.maxBy(r => (r._4, -r._1))._1)
       rows.map(r => (r._1, r._2, r._3, r._4, r._1 == chosen))
         .toDF("n_probe", "n_hit", "n_exact", "recall_ppm", "chosen")
-    } finally freeCheckpoint(exact)
+    } finally GenStore.freeLocal(exact)
   }
-
-  /** A checkpoint's blocks stay pinned until driver GC unless freed
-    * explicitly (the Graph.freeDeadCheckpoint lesson) — on a periodic
-    * maintenance cadence that leak compounds per run.
-    */
-  private def freeCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed match {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(false)
-      case _ => ()
-    }
 
   /** COMPLIANCE PURGE: physically erase the ids' bytes from every file
     * under the index when the call returns — the [[Purge]] contract on
@@ -1319,7 +1309,7 @@ object Similarity {
     val deleted =
       try readCodesTagged(spark, root)
         .join(idsd, Seq(cId), "left_semi").count()
-      finally freeCheckpoint(idsd)
+      finally GenStore.freeLocal(idsd)
     // always run the full tail even when no physical row matched: an
     // EARLIER delete+compaction may have left the ids only in archived
     // catalogs/tombstone logs, which steps 2-4 are what erase

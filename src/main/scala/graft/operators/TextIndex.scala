@@ -288,44 +288,12 @@ object TextIndex {
     * contribution rows: matched-term count == the query's term count) —
     * the precision mode for short keyword queries at corpus scale,
     * where disjunctive top-k drowns in single-term matches.
-    *
-    * MAX-SCORE PRUNING (`maxScorePrune`, disjunctive mode, OPT-IN):
-    * before the dl join, every candidate gets a score UPPER BOUND from
-    * its posting rows alone — `dl ≥ tf`, and the tf-part is
-    * monotonically decreasing in dl, so substituting `dl = tf` bounds
-    * each term's contribution above. The top-k candidates BY BOUND are
-    * scored exactly (a k-row dl read) and the k-th exact score becomes
-    * the bar τ: any candidate whose bound is below τ has exact < τ ≤
-    * the true k-th score and can never rank — the WAND/max-score
-    * family's argument, run as two set-level passes instead of a
-    * posting cursor. Every seed doc's bound ≥ its exact ≥ τ, so ≥ k
-    * survivors always remain, and a 1e-9 slack absorbs float-summation
-    * reordering at the boundary — the pruning is SCORE-EXACT (the spec
-    * pins pruned ≡ unpruned including tie order).
-    *
-    * The path materializes the per-doc bound/inputs frame ONCE
-    * (r16's cut re-derived the posting join for the bound, seed, and
-    * final legs — [[ServeBench]] measured that at 6.3 s vs 1.7 s
-    * unpruned at sf0.1; this restructure halves it to ~3.2 s vs
-    * ~2.1 s). The REMAINING gap at sf0.1 is structural, which is why
-    * the flag stays OFF by default: the pruned path must run
-    * everything the unpruned one runs (posting pass, dl join, fold,
-    * window) PLUS the bound aggregation and the eager seed/τ legs
-    * (~4 extra small jobs); at ~50k docs the full dl join it trims
-    * costs less than those fixed overheads. The crossover is the
-    * corpus-scale regime the operator exists for — candidate sets in
-    * the millions, where the per-candidate LENGTH-NORMALIZATION I/O
-    * (dl bucket reads ∝ candidates) dwarfs a handful of driver-side
-    * legs over ≤ |terms| posting buckets. Measured, documented,
-    * opt-in — not guessed. Conjunctive mode skips it (τ from a
-    * not-yet-intersected seed would over-prune).
     */
   def serveTextIndex(spark: SparkSession, path: String, queries: DataFrame,
                      qIdCol: String, qTextCol: String, idCol: String,
                      k: Int = 10, k1: Double = 1.2, b: Double = 0.75,
                      requireAll: Boolean = false,
-                     asOfGen: Option[Long] = None,
-                     maxScorePrune: Boolean = false): DataFrame = {
+                     asOfGen: Option[Long] = None): DataFrame = {
     // TIME TRAVEL: every append advances all substores by exactly one
     // generation (the four-leg ledger order), so one generation number
     // addresses a consistent index snapshot — postings, lengths, and
@@ -371,10 +339,8 @@ object TextIndex {
       .join(broadcast(dfT), Seq("key"))
     val idf = round(log(lit(1.0) +
       (lit(nd) - col("df") + lit(0.5)) / (col("df") + lit(0.5))), 6)
-    // the EXACT scoring leg over a candidate subset: dl read ∝ the
-    // subset's buckets, then the deterministic term-ordered fold —
-    // shared verbatim by the seed and final legs so pruning can never
-    // drift from the unpruned computation
+    // the EXACT scoring leg over the candidates: dl read ∝ their
+    // buckets, then the deterministic term-ordered fold
     def scoreOf(c: DataFrame): DataFrame = {
       val dlTouched = c.select(col("id").as("key"))
         .distinct().select(GenStore.bucketOfKey(mDl.nBuckets).as("bucket"))
@@ -402,92 +368,6 @@ object TextIndex {
           aggregate(col("cs"), lit(0.0),
             (acc, x) => acc + x.getField("contrib")).as("score"),
           size(col("cs")).as("__nmatch"))
-    }
-    // MAX-SCORE pruning (see class doc): ONE materialized pass over the
-    // candidate frame computes, per (query, doc), BOTH the score upper
-    // bound (dl := tf) and the exact-scoring inputs (the term structs),
-    // so the bound, seed, and final legs never re-derive the posting
-    // join — the lazy-model re-derivation that made the first cut LOSE
-    // its own benchmark. The path is EAGER end-to-end: τ collects to
-    // the driver (≤ |queries| rows), the survivors score against dl,
-    // and the returned frame is the checkpointed top-k itself (≤ k
-    // rows per query pinned — negligible; the big intermediate is
-    // freed before returning).
-    if (!requireAll && maxScorePrune) {
-      val ubPart = (col("tf") * lit(k1 + 1.0)) /
-        (col("tf") + lit(k1) *
-          (lit(1.0) - lit(b) + lit(b) * col("tf") / lit(avgdl)))
-      val perDoc = cand
-        .select(col("__qid"), col("id"), col("key"), col("tf"),
-          idf.as("__idf"), (idf * ubPart).as("__c"))
-        .groupBy(col("__qid"), col("id"))
-        .agg(sum(col("__c")).as("__ub"),
-          sort_array(collect_list(
-            struct(col("key"), col("tf"), col("__idf")))).as("__ts"))
-        .localCheckpoint(true)
-      try {
-        // exact BM25 from the carried structs + the dl read — the same
-        // key-ordered fold and expression shapes as [[scoreOf]], so
-        // pruned scores are bit-identical to the unpruned path's
-        def exactOf(c: DataFrame): DataFrame = {
-          val dlTouched = c.select(col("id").as("key"))
-            .distinct().select(GenStore.bucketOfKey(mDl.nBuckets)
-              .as("bucket"))
-            .distinct().collect().map(_.getLong(0)).toSet
-          val dlExisting = mDl.entries.filter(e => dlTouched.contains(e._1))
-          if (dlExisting.isEmpty)
-            return c.select(col("__qid"), col("id")).limit(0)
-              .withColumn("score", lit(0.0))
-          val dlRows = GenStore.readBucketDirs(spark, s"$path/dl", dlExisting)
-            .select(col("key").as("id"), col("dl"))
-            .join(c.select(col("id")).distinct(), Seq("id"), "left_semi")
-          c.join(dlRows, Seq("id"))
-            .select(col("__qid"), col("id"),
-              aggregate(col("__ts"), lit(0.0), (acc, x) =>
-                acc + x.getField("__idf") *
-                  ((x.getField("tf") * lit(k1 + 1.0)) /
-                    (x.getField("tf") + lit(k1) *
-                      (lit(1.0) - lit(b) +
-                        lit(b) * col("dl") / lit(avgdl))))).as("score"))
-        }
-        val wUb = Window.partitionBy(col("__qid"))
-          .orderBy(col("__ub").desc, col("id"))
-        val seed = perDoc.withColumn("__r", row_number().over(wUb))
-          .filter(col("__r") <= k).drop("__r")
-        // τ per query: the k-th exact seed score (< k docs total ⇒ no τ,
-        // nothing prunable) — ≤ |queries| rows, collected once
-        val tau = exactOf(seed)
-          .groupBy(col("__qid"))
-          .agg(count(lit(1)).as("__n"), min(col("score")).as("__tau"))
-          .filter(col("__n") >= k)
-          .select(col("__qid"), col("__tau"))
-          .collect().map(r => (r.get(0), r.getDouble(1)))
-        val survivors =
-          if (tau.isEmpty) perDoc
-          else {
-            val tauDf = spark.createDataFrame(
-              java.util.Arrays.asList(tau.map(t =>
-                org.apache.spark.sql.Row(t._1, t._2)): _*),
-              org.apache.spark.sql.types.StructType(Seq(
-                org.apache.spark.sql.types.StructField("__qid",
-                  perDoc.schema("__qid").dataType),
-                org.apache.spark.sql.types.StructField("__tau",
-                  org.apache.spark.sql.types.DoubleType))))
-            perDoc.join(broadcast(tauDf), Seq("__qid"), "left")
-              .filter(col("__tau").isNull ||
-                col("__ub") >= col("__tau") - lit(1e-9))
-              .drop("__tau")
-          }
-        val wp = Window.partitionBy(col("__qid"))
-          .orderBy(col("score").desc, col("id"))
-        // the returned frame IS the materialized top-k (its own blocks,
-        // k rows per query): perDoc frees in the finally, leak-free
-        return exactOf(survivors).withColumn("rn", row_number().over(wp))
-          .filter(col("rn") <= k)
-          .select(col("__qid").as(qIdCol), col("id").as(idCol),
-            col("score"), col("rn"))
-          .localCheckpoint(true)
-      } finally GenStore.freeLocal(perDoc)
     }
     val scored = scoreOf(cand)
     val filtered =

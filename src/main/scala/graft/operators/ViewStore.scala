@@ -226,7 +226,7 @@ object ViewStore {
         GenStore.inParallel(Seq(
           () => commit("a", aSt), () => commit("b", bSt)))
       }
-    } finally { freeCheckpoint(aSt); freeCheckpoint(bSt) }
+    } finally { GenStore.freeLocal(aSt); GenStore.freeLocal(bSt) }
     // freshness fingerprint for the MV rewrite — both bases' files,
     // strictly AFTER the commits ([[BaseFiles]] ordering argument); a
     // build RESETS it (stale names would trip the shrinkage check
@@ -392,8 +392,8 @@ object ViewStore {
             Seq("key", "grp"), Seq("na"), appliedId),
           () => GenStore.mergeAdditiveWith(spark, s"$path/b", dB, Seq("key"),
             bFolds(extrema), appliedId)))
-      } finally freeCheckpoint(touchedKeys)
-    } finally { freeCheckpoint(dA); freeCheckpoint(dB) }
+      } finally GenStore.freeLocal(touchedKeys)
+    } finally { GenStore.freeLocal(dA); GenStore.freeLocal(dB) }
     // freshness fingerprint AFTER all three legs ([[BaseFiles]])
     BaseFiles.record(spark, path,
       da.inputFiles.toSeq ++ db.inputFiles.toSeq)
@@ -557,9 +557,9 @@ object ViewStore {
               spark.read.parquet(s"$path/_purged/keys")
                 .select(col("key")).distinct())
           (aDel, bDel, vDel)
-        } finally freeCheckpoint(orphanKeys)
-      } finally freeCheckpoint(subjectRows)
-    } finally freeCheckpoint(g)
+        } finally GenStore.freeLocal(orphanKeys)
+      } finally GenStore.freeLocal(subjectRows)
+    } finally GenStore.freeLocal(g)
   }
 
   /** The a-substore sweep deletes by GROUP, which any bucket may hold —
@@ -589,7 +589,7 @@ object ViewStore {
           m.entries.filterNot(e => touched.contains(e._1)), None)
       GenStore.purgeCommitted(spark, subPath)
       deleted
-    } finally freeCheckpoint(keep)
+    } finally GenStore.freeLocal(keep)
   }
 
   /** Manifest-pruned AUDIT diff of the served view between two of its
@@ -635,11 +635,4 @@ object ViewStore {
     graft.streaming.Suppression.clear(
       groups.select(col(grpCol).cast("long").as("grp")),
       s"$path/_purged/groups", "grp")
-
-  private def freeCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed match {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(false)
-      case _ => ()
-    }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.TextFns
-import graft.operators.{Chunker, Dedup, Similarity}
+import graft.operators.{Chunker, Dedup, GenStore, Similarity}
 
 /** Dedup / similarity / chunking surface (BASELINE.json north star):
   * exact + MinHash-LSH + SimHash + n-gram-Jaccard + embedding near-dup,
@@ -1459,11 +1459,7 @@ object DedupQueries {
           Dedup.mergeIntoClusterStore(dayPairs, tmp)            // gen 2
           Dedup.rollbackClusterStore(s, tmp, 1L)                // gen 3
           Dedup.mergeIntoClusterStore(dayPairs, tmp)            // gen 4
-        } finally dayPairs.queryExecution.analyzed match {
-          case l: org.apache.spark.sql.execution.LogicalRDD =>
-            l.rdd.unpersist(false)
-          case _ => ()
-        }
+        } finally GenStore.freeLocal(dayPairs)
         Dedup.readClusterStore(s, tmp).orderBy(col("id"))
       },
       Some(q284OracleSql)),

@@ -21,12 +21,7 @@ object MiscQueries {
     */
   private def withLocal[T](df: DataFrame)(f: DataFrame => T): T = {
     val c = df.localCheckpoint(true)
-    try f(c)
-    finally c.queryExecution.analyzed match {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(false)
-      case _ => ()
-    }
+    try f(c) finally graft.operators.GenStore.freeLocal(c)
   }
 
   /** OVERLAP a layout fixture's independent per-file writes (guide

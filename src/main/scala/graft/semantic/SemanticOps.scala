@@ -94,7 +94,11 @@ object SemanticOps extends Serializable {
     val ddl = outputSchema.toDDL
     val inCols = df.columns
     val keepCols = inCols.filterNot(outputSchema.fieldNames.contains)
-    val validExpr = validations.map(expr).reduceOption(_ && _).getOrElse(lit(true))
+    // a predicate that evaluates to null (malformed model JSON parses to
+    // null fields) counts as failed, so the row is retried and then
+    // dead-lettered instead of slipping past both filters below
+    val validExpr = coalesce(
+      validations.map(expr).reduceOption(_ && _).getOrElse(lit(true)), lit(false))
 
     var pending = df
     var ok: Option[DataFrame] = None

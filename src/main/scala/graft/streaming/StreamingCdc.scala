@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.Cdc
+import graft.operators.{Cdc, GenStore}
 
 /** Streaming CDC apply — a continuously-merged warehouse snapshot: change
   * records (upserts + delete tombstones) arrive as a stream and a
@@ -212,10 +212,6 @@ object StreamingCdc {
                 nBuckets: Int = 16, deleteOp: String = "D"): Long = {
     val spark = keys.sparkSession
     val k = keys.select(col(keyCol)).distinct().localCheckpoint(true)
-    def free(df: DataFrame): Unit = df.queryExecution.analyzed match {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(false)
-      case _ => ()
-    }
     try {
       val touched = k
         .select(bucketOf(col(keyCol), nBuckets).as("__bucket"))
@@ -262,11 +258,11 @@ object StreamingCdc {
               .partitionBy("__bucket").parquet(snapPath)
             dropEmptied(snapPath, resolved.select(col("__bucket")).distinct()
               .collect().map(_.getInt(0)).toSet)
-          } finally free(resolved)
+          } finally GenStore.freeLocal(resolved)
         }
         deleted
-      } finally free(keep)
-    } finally free(k)
+      } finally GenStore.freeLocal(keep)
+    } finally GenStore.freeLocal(k)
   }
 
   /** Re-admit re-consented subjects ([[Suppression.clear]]): the erased

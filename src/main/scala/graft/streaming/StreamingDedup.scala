@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
 import graft.functions.TextFns
-import graft.operators.Dedup
+import graft.operators.{Dedup, GenStore}
 
 /** Continuous corpus ingestion with near-dup detection — the production
   * shape for a training-data pipeline that receives documents as a stream:
@@ -472,10 +472,6 @@ object StreamingDedup {
     }
     val nBuckets = s""""nBuckets":(\\d+)""".r
       .findFirstMatchIn(metaS).get.group(1).toInt
-    def free(df: DataFrame): Unit = df.queryExecution.analyzed match {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(false)
-      case _ => ()
-    }
     def dropEmptied(path: String, pCol: String, touched: Set[Int],
                     nonEmpty: Set[Int]): Unit =
       touched.filterNot(nonEmpty).foreach(b => fs.delete(
@@ -506,7 +502,7 @@ object StreamingDedup {
                 .collect().map(_.getInt(0)).toSet)
           }
           d
-        } finally free(keep)
+        } finally GenStore.freeLocal(keep)
       // NO early-out on deleted == 0: the bands-before-docs merge order
       // means a crash window can leave band rows whose docs row never
       // landed — a compliance purge must sweep bands and pairs regardless
@@ -529,7 +525,7 @@ object StreamingDedup {
             dropEmptied(bandsPath(storePath), "__bbk", tb,
               keepB.select(col("__bbk")).distinct()
                 .collect().map(_.getInt(0)).toSet)
-          } finally free(keepB)
+          } finally GenStore.freeLocal(keepB)
         }
       }
       // pairs ledger — per-batch shard dirs; rewrite only shards naming a
@@ -552,12 +548,12 @@ object StreamingDedup {
               .join(k.select(col(idCol).as("dup_id")), Seq("dup_id"), "left_anti")
               .localCheckpoint(true)
             try keepP.write.mode("overwrite").parquet(dir)
-            finally free(keepP)
+            finally GenStore.freeLocal(keepP)
           }
         }
       }
       deleted
-    } finally free(k)
+    } finally GenStore.freeLocal(k)
   }
 
   /** Re-admit re-consented subjects: remove them from the suppression

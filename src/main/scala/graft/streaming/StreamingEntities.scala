@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 
-import graft.operators.Entities
+import graft.operators.{Entities, GenStore}
 
 /** Continuous entity resolution — the streaming form of
   * [[Entities.incrementalPairs]]: names arrive as a stream, each
@@ -274,10 +274,6 @@ object StreamingEntities {
     }
     val nBuckets = s""""nBuckets":(\\d+)""".r
       .findFirstMatchIn(metaS).get.group(1).toInt
-    def free(df: DataFrame): Unit = df.queryExecution.analyzed match {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(false)
-      case _ => ()
-    }
     def dropEmptied(path: String, pCol: String, touched: Set[Int],
                     nonEmpty: Set[Int]): Unit =
       touched.filterNot(nonEmpty).foreach(b => fs.delete(
@@ -305,7 +301,7 @@ object StreamingEntities {
                 .collect().map(_.getInt(0)).toSet)
           }
           d
-        } finally free(keep)
+        } finally GenStore.freeLocal(keep)
       // no early-out: the vars-before-names merge order means a crash
       // window can leave variant rows whose names row never landed
       val varsP = new org.apache.hadoop.fs.Path(varsPath(storePath))
@@ -325,7 +321,7 @@ object StreamingEntities {
             dropEmptied(varsPath(storePath), "__vbk", tv,
               keepV.select(col("__vbk")).distinct()
                 .collect().map(_.getInt(0)).toSet)
-          } finally free(keepV)
+          } finally GenStore.freeLocal(keepV)
         }
       }
       pairsPath.foreach { pp =>
@@ -346,12 +342,12 @@ object StreamingEntities {
               .join(k.select(col(idCol).as("peer_id")), Seq("peer_id"), "left_anti")
               .localCheckpoint(true)
             try keepP.write.mode("overwrite").parquet(dir)
-            finally free(keepP)
+            finally GenStore.freeLocal(keepP)
           }
         }
       }
       deleted
-    } finally free(k)
+    } finally GenStore.freeLocal(k)
   }
 
   /** Re-admit re-consented subjects ([[Suppression.clear]]): the erased

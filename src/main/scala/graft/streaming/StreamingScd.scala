@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.operators.Scd
+import graft.operators.{GenStore, Scd}
 
 /** Streaming SCD Type-2 maintenance — the warehouse production shape:
   * observations arrive as a stream, and a persisted dimension table of
@@ -180,10 +180,6 @@ object StreamingScd {
                 nBuckets: Int = 16): Long = {
     val spark = keys.sparkSession
     val k = keys.select(col(keyCol)).distinct().localCheckpoint(true)
-    def free(df: DataFrame): Unit = df.queryExecution.analyzed match {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(false)
-      case _ => ()
-    }
     try {
       val touched = k
         .select(bucketOf(col(keyCol), nBuckets).as("__bucket"))
@@ -232,11 +228,11 @@ object StreamingScd {
               .partitionBy("__bucket").parquet(dimPath)
             dropEmptied(dimPath, reversioned.select(col("__bucket")).distinct()
               .collect().map(_.getInt(0)).toSet)
-          } finally free(reversioned)
+          } finally GenStore.freeLocal(reversioned)
         }
         deleted
-      } finally free(keep)
-    } finally free(k)
+      } finally GenStore.freeLocal(keep)
+    } finally GenStore.freeLocal(k)
   }
 
   /** Re-admit re-consented subjects ([[Suppression.clear]]): the erased

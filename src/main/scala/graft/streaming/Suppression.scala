@@ -36,10 +36,6 @@ private[graft] object Suppression {
       if (keep.isEmpty) fs.delete(p, true)
       else keep.write.mode("overwrite").parquet(listPath)
       removed
-    } finally keep.queryExecution.analyzed match {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(false)
-      case _ => ()
-    }
+    } finally graft.operators.GenStore.freeLocal(keep)
   }
 }

@@ -292,7 +292,7 @@ class GraphSpec extends SparkSpec {
   }
 
   test("iteration loops never free a CALLER's upstream checkpoint") {
-    // regression: freeDeadCheckpoint used to collect every LogicalRDD in
+    // regression: the loops' checkpoint free used to collect every LogicalRDD in
     // the plan, so round 1 (init rank still derived from the input) freed
     // a localCheckpoint the caller's pipeline contained — later rounds
     // then died with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.pipeline._
-import graft.semantic.{HttpModelClient, SemanticOps, StubModelClient}
+import graft.semantic.{HttpModelClient, ModelClient, SemanticOps, StubModelClient}
 
 class SemanticOpsSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
   import spark.implicits._
@@ -124,6 +124,16 @@ class SemanticOpsSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     def okAt(r: Int) = SemanticOps.semanticMap(docs, "S: {{ input.text }}", schema, client,
       validations = Seq("n % 2 = 0"), retries = r).ok.count()
     assert(okAt(4) >= okAt(0))
+  }
+
+  test("a row whose validation evaluates to null is retried, then dead-lettered") {
+    // malformed JSON parses to null fields, so "n >= 0" is null, not false
+    val res = SemanticOps.semanticMap(docs, "S: {{ input.text }}", schema,
+      new MalformedFor("gamma"), validations = Seq("n >= 0"), retries = 1)
+    val (ok, dead) = (res.ok.count(), res.dead.count())
+    assert(ok + dead == docs.count(), s"rows lost: ok=$ok dead=$dead")
+    assert(res.dead.select("doc_id").as[Long].collect().toSeq == Seq(1L))
+    assert(res.dead.columns.contains("__error"))
   }
 
   test("semanticReduce folds each group to one schema-conformant row, fanIn-invariant determinism") {
@@ -263,4 +273,13 @@ class SemanticOpsSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     assert(out.count() > 0)
     assert(out.filter(col("resp").isNull || length(col("resp")) === 0).count() == 0)
   }
+}
+
+/** Answers truncated JSON to every prompt containing `marker`, and the
+  * stub's answer to the rest. */
+private class MalformedFor(marker: String) extends ModelClient {
+  private val stub = new StubModelClient()
+  override def complete(prompt: String, schemaDdl: String): String =
+    if (prompt.contains(marker)) """{"summary": "trunc"""
+    else stub.complete(prompt, schemaDdl)
 }

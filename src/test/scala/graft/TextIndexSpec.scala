@@ -244,27 +244,6 @@ class TextIndexSpec extends SparkSpec {
       Seq("doc-1", "doc-4").toDF("id"), path) == 2L)
   }
 
-  test("max-score pruning is score-exact: pruned serving equals unpruned, " +
-    "ties included") {
-    val path = tmp()
-    // heavy vocabulary overlap: "common" matches every doc (the
-    // high-df worst case pruning exists for), modular words tie scores
-    val corpus = (1L to 120L).map { i =>
-      (i, s"common w${i % 7} w${i % 11} w${i % 13} x${i % 3}")
-    }.toDF("doc_id", "text")
-    TextIndex.buildTextIndex(corpus, path, "doc_id", "text", nBuckets = 8)
-    val qs = Seq((1L, "common w3"), (2L, "w5 x1 common"), (3L, "w1 w2 w10"))
-      .toDF("qid", "qtext")
-    def serve(prune: Boolean) =
-      TextIndex.serveTextIndex(spark, path, qs, "qid", "qtext", "doc_id",
-          k = 5, maxScorePrune = prune)
-        .select(col("qid"), col("doc_id"), round(col("score"), 9).as("s"),
-          col("rn"))
-        .as[(Long, Long, Double, Int)].collect().toSet
-    assert(serve(true) == serve(false),
-      "pruned and unpruned serving must agree bit-for-bit, rank included")
-  }
-
   test("appends land as LSM segments; compaction folds them; serving " +
     "unchanged") {
     val path = tmp()
