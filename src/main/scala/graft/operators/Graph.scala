@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Iterative graph analytics over edge DataFrames.
@@ -30,12 +30,11 @@ import org.apache.spark.sql.functions._
   * probe is a node-set anti-join computed ONCE; per iteration it costs
   * one scalar aggregate over the (semi-joined) rank vector and nothing at
   * all when the graph has no dangling nodes. Lineage is cut with
-  * `localCheckpoint` (every round when the dangling aggregate forces a
-  * materialization anyway, every 4th otherwise — the
-  * [[Dedup.connectedComponents]] discipline), so ten iterations don't
-  * compound into a thousand-stage plan. At cluster scale the edge list
-  * is pre-partitioned by `src` once and every iteration reuses that
-  * exchange.
+  * `localCheckpoint` every round, and the previous round's vector is
+  * freed ([[GenStore.freeLocal]]), so ten iterations don't compound into
+  * a thousand-stage plan. At cluster scale the edge list is
+  * pre-partitioned by `src` once and every iteration reuses that
+  * exchange. Plain, personalized and weighted PageRank run one loop.
   */
 object Graph {
 
@@ -50,6 +49,64 @@ object Graph {
     */
   private def vecSide(vec: DataFrame, nRows: Long): DataFrame =
     if (nRows <= 4000000L) broadcast(vec) else vec
+
+  /** A weighted edge list as `(u, v, w)` longs, self-loops dropped unless
+    * `dropLoops` is false. Fails loudly with `err` on a null weight or one
+    * below `minW` among the kept rows — a null vote, length or share
+    * would otherwise vanish silently from every sum.
+    */
+  private def weightedEdges(edges: DataFrame, srcCol: String, dstCol: String,
+                            wCol: String, err: String, minW: Long = 1L,
+                            dropLoops: Boolean = true): DataFrame = {
+    val a = edges
+      .select(col(srcCol).cast("long").as("u"), col(dstCol).cast("long").as("v"),
+        col(wCol).cast("long").as("w"))
+    val kept = if (dropLoops) a.filter(col("u") =!= col("v")) else a
+    require(kept.filter(col("w") < minW || col("w").isNull).isEmpty, err)
+    kept
+  }
+
+  /** Fails loudly unless `lbl` gives every node of `nodes` exactly one
+    * label. BOTH guards in ONE aggregate pass (one job, not two): a
+    * graph node with no label would understate its community's degree
+    * sums, and a node carrying TWO labels would double-count them. Full
+    * outer join of per-node label counts vs graph nodes: nl IS NULL on a
+    * graph-only row = missing; nl > 1 = not a partition; a label-only
+    * row is a node outside the graph, which each caller documents.
+    */
+  private def requirePartition(op: String, lbl: DataFrame, nodes: DataFrame,
+                               why: String = ""): Unit = {
+    val chk = lbl.groupBy(col("node")).agg(count(lit(1)).as("nl"))
+      .join(nodes.withColumn("__g", lit(1)), Seq("node"), "full")
+      .agg(
+        sum(when(col("nl").isNull, 1L).otherwise(0L)).as("missing"),
+        sum(when(col("nl") > 1L, 1L).otherwise(0L)).as("multi"))
+      .collect()(0)
+    require(chk.getLong(0) == 0L, s"$op: assignment is missing graph nodes$why")
+    require(chk.getLong(1) == 0L,
+      s"$op: a node has multiple labels — assignment must be a partition")
+  }
+
+  /** One canonical `(u, v, w)` row (`u < v`) per undirected edge of a
+    * weighted `(u, v, w)` list, parallel rows of either orientation
+    * summed.
+    */
+  private def canonical(a: DataFrame): DataFrame =
+    a.select(least(col("u"), col("v")).as("u"),
+        greatest(col("u"), col("v")).as("v"), col("w"))
+      .groupBy(col("u"), col("v")).agg(sum(col("w")).as("w"))
+
+  /** The unweighted scores' edge list: one canonical `(u, v)` row
+    * (`u < v`) per distinct non-loop edge, at unit weight.
+    */
+  private def unitCanonical(edges: DataFrame, srcCol: String,
+                            dstCol: String): DataFrame =
+    edges
+      .select(col(srcCol).cast("long").as("u"), col(dstCol).cast("long").as("v"))
+      .filter(col("u") =!= col("v"))
+      .select(least(col("u"), col("v")).as("u"),
+        greatest(col("u"), col("v")).as("v"))
+      .distinct().withColumn("w", lit(1L))
 
   /** Exact triangle counts and degrees per node of an UNDIRECTED graph
     * (direction and duplicates in the input edge list are ignored;
@@ -138,116 +195,8 @@ object Graph {
     val e = edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
       .distinct()
-      // pre-partition by src ONCE: every iteration's contribution join
-      // reads the cached src-partitioned edges without re-exchanging the
-      // (graph-sized) edge side; only the node-sized rank vector shuffles
-      // per round
-      .repartition(col("src")).persist()
-    try {
-      val nodes = e.select(col("src").as("node"))
-        .union(e.select(col("dst").as("node"))).distinct().persist()
-      try {
-        // node-sized, computed once: the set whose mass must be
-        // redistributed (replaces the former loud no-out/no-in contract —
-        // both cases are now first-class, in ONE pass over the node set)
-        val dangling = nodes
-          .join(e.select(col("src").as("node")).distinct(), Seq("node"), "left_anti")
-          .persist()
-        try {
-          val nDangling = dangling.count()
-          val n = nodes.count()
-          val init = scale / n
-          val base = ((15L * scale) / 100L) / n
-          // the out-degree is a property of the STATIC edge list, so it is
-          // folded into the persisted (src-partitioned) edges ONCE —
-          // (src, dst, od) — instead of re-joined every round: the
-          // per-iteration cost is exactly one edge×rank join + one dst
-          // aggregate, nothing edge-sized beyond that
-          val ed = e
-            .join(e.groupBy(col("src")).agg(count(lit(1)).as("od")), "src")
-            .persist()
-          try {
-          // materialize ed and drop the raw edge cache NOW: the loop reads
-          // only ed/nodes/dangling (all independently materialized above),
-          // so holding both edge-sized caches would double the storage
-          // footprint for the whole iteration
-          ed.count()
-          e.unpersist(false)
-          var rank = nodes.select(col("node"), lit(init).as("r"))
-          var i = 1
-          var ranIters = 0
-          var converged = false
-          while (i <= iters && !converged) {
-            // exact integer dangling share per round: sum of the per-
-            // dangling-node floored share — the same decomposition the
-            // oracle's target-map replay sums row-wise, so totals agree
-            // bit-for-bit. The denominator is precomputed as a Long IN
-            // SCALA: an SQL-side `100 * $n` would parse n as an Int
-            // literal and overflow Int arithmetic beyond ~21.4M nodes.
-            // FOLDED into the round's checkpoint job as a broadcast
-            // 1-row aggregate instead of a separate `.head()` action —
-            // one action per iteration instead of two (the broadcast
-            // subquery still runs as a driver-coordinated exchange inside
-            // that action, but the extra collect-plus-resubmit round-trip
-            // is gone), which on a 10-round run is the dominant fixed
-            // cost at small SF and pure scheduler overhead at cluster
-            // scale.
-            // the per-node base term rides INTO the contribution
-            // aggregate as one node-list row per node (guide §2.4: the
-            // former node-list LEFT JOIN above the aggregate cost a
-            // second exchange + join stage per round; integer addition
-            // commutes, so summing the base row with the edge
-            // contributions is the identical r)
-            val contribs = ed
-              .join(vecSide(rank.withColumnRenamed("node", "src"), n), "src")
-              .select(col("dst").as("node"),
-                expr("(85 * r) div (100 * od)").as("c"))
-            val next =
-              if (nDangling == 0)
-                contribs
-                  .unionByName(nodes.select(col("node"), lit(base).as("c")))
-                  .groupBy(col("node")).agg(sum(col("c")).as("r"))
-              else {
-                // dsh keeps `rank` as a lazy reader inside `next`; it MUST
-                // be fully consumed by the eager localCheckpoint(true)
-                // below BEFORE GenStore.freeLocal(rank) runs (the
-                // no-live-lazy-readers contract) — a lazy checkpoint here
-                // would read freed blocks.
-                val dsh = rank.join(dangling, Seq("node"), "left_semi")
-                  .agg(coalesce(sum(expr(s"(85 * r) div ${100L * n}")), lit(0L))
-                    .as("__dsh"))
-                contribs
-                  .unionByName(nodes.crossJoin(broadcast(dsh))
-                    .select(col("node"), (lit(base) + col("__dsh")).as("c")))
-                  .groupBy(col("node")).agg(sum(col("c")).as("r"))
-              }
-            // one lineage cut per round. Fusing rounds into one action
-            // measured slower (10-round PPR at sf0.1: 8.2-9.5 s at 4
-            // rounds per cut vs 5.2-6.6 s at 1 — AQE replans the deepened
-            // plan stage by stage), and a vector with a second reader (the
-            // dangling share, the convergence probe) would replay the
-            // fused rounds per reader.
-            val materialized = next.localCheckpoint(true)
-            if (epsilon >= 0) {
-              // one exact integer scalar per round, over two checkpointed
-              // node-sized vectors — the dangling-share cost class
-              val maxDelta = materialized
-                .join(rank.withColumnRenamed("r", "__pr"), "node")
-                .agg(coalesce(max(abs(col("r") - col("__pr"))), lit(0L)))
-                .head().getLong(0)
-              converged = maxDelta <= epsilon
-            }
-            // the previous round's checkpoint; a no-op on the lazy init
-            GenStore.freeLocal(rank)
-            rank = materialized
-            ranIters = i
-            i += 1
-          }
-          (rank, ranIters)
-          } finally ed.unpersist(false)
-        } finally dangling.unpersist(false)
-      } finally nodes.unpersist(false)
-    } finally e.unpersist(false)
+    rankLoop(e, count(lit(1)).as("od"), "(85 * r) div (100 * od)", None,
+      iters, scale, epsilon)
   }
 
   /** PERSONALIZED PageRank — teleport restricted to a seed set (the
@@ -272,101 +221,131 @@ object Graph {
     val e = edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
       .distinct()
+    rankLoop(e, count(lit(1)).as("od"), "(85 * r) div (100 * od)",
+      Some(seeds.select(col(seedCol).cast("long").as("node")).distinct()),
+      iters, scale, -1L)._1
+  }
+
+  /** The one PageRank loop behind [[pageRankFixedConverged]],
+    * [[personalizedPageRank]] and [[weightedPageRank]]. `edges` is the
+    * caller's deduplicated `(src, dst[, w])` list, `outDeg` the per-src
+    * aggregate folded into it once and `contrib` the per-edge
+    * contribution over `r` and that aggregate. The teleport — start
+    * mass, base term, dangling share — goes to every node over n, or
+    * with `seeds` (distinct `node` ids) to the live seeds only over |S|.
+    * `epsilon >= 0` adds the convergence stop. Returns (ranks,
+    * iterations run).
+    */
+  private def rankLoop(edges: DataFrame, outDeg: Column, contrib: String,
+                       seeds: Option[DataFrame], iters: Int, scale: Long,
+                       epsilon: Long): (DataFrame, Int) = {
+    val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def keep(df: DataFrame): DataFrame = { cached += df.persist(); df }
+    try {
       // pre-partition by src ONCE: every iteration's contribution join
       // reads the cached src-partitioned edges without re-exchanging the
       // (graph-sized) edge side; only the node-sized rank vector shuffles
       // per round
-      .repartition(col("src")).persist()
-    try {
-      val nodes = e.select(col("src").as("node"))
-        .union(e.select(col("dst").as("node"))).distinct().persist()
-      try {
-        val seed = seeds.select(col(seedCol).cast("long").as("node")).distinct()
-          .join(nodes, Seq("node"), "left_semi").persist()
-        try {
-          val nSeeds = seed.count()
-          require(nSeeds > 0, "personalizedPageRank: no seed is a graph node")
-          val dangling = nodes
-            .join(e.select(col("src").as("node")).distinct(), Seq("node"), "left_anti")
-            .persist()
-          try {
-            val nDangling = dangling.count()
-            // node count gates the per-round vector broadcast (vecSide);
-            // nodes is already persisted by the dangling probe, so this
-            // is one cheap cached count at setup
-            val nNodes = nodes.count()
-            val init = scale / nSeeds
-            val base = ((15L * scale) / 100L) / nSeeds
-            // degree folded into the persisted edges once — see
-            // pageRankFixedConverged's ed
-            val ed = e
-              .join(e.groupBy(col("src")).agg(count(lit(1)).as("od")), "src")
-              .persist()
-            try {
-            // node-sized (node, __is) vector computed ONCE: the seed-flag
-            // join is loop-invariant, so hoisting it saves one node-sized
-            // join per round (10 rounds = 10 joins on the default run)
-            val nodeSeed = nodes
-              .join(seed.withColumn("__is", lit(1)), Seq("node"), "left")
-              .select(col("node"), coalesce(col("__is"), lit(0)).as("__is"))
-              .persist()
-            try {
-            // see pageRankFixedConverged: one edge-sized cache, not two
-            ed.count()
-            e.unpersist(false)
-            var rank = nodeSeed.select(col("node"),
-              when(col("__is") === 1, lit(init)).otherwise(lit(0L)).as("r"))
-            var i = 1
-            while (i <= iters) {
-              // the per-node seed-gated base term rides INTO the
-              // contribution aggregate as one node-list row per node —
-              // see pageRankFixedConverged (the former nodeSeed LEFT
-              // JOIN cost a second exchange + join stage per round;
-              // integer addition commutes, so the summed r is identical)
-              val contribs = ed
-                .join(vecSide(rank.withColumnRenamed("node", "src"), nNodes),
-                  "src")
-                .select(col("dst").as("node"),
-                  expr("(85 * r) div (100 * od)").as("c"))
-              // dangling share folded into the round's checkpoint job as a
-              // broadcast 1-row aggregate (one action per iteration instead
-              // of two — see pageRankFixedConverged); here the share is
-              // paid ONLY to seeds, so the broadcast scalar gates on
-              // __is === 1 instead of being added unconditionally. As in
-              // pageRankFixedConverged, dsh makes `rank` a lazy reader of
-              // `next`: it must be fully consumed by the eager
-              // localCheckpoint(true) before GenStore.freeLocal(rank).
-              val next =
-                if (nDangling == 0)
-                  contribs
-                    .unionByName(nodeSeed.select(col("node"),
-                      when(col("__is") === 1, lit(base)).otherwise(lit(0L))
-                        .as("c")))
-                    .groupBy(col("node")).agg(sum(col("c")).as("r"))
-                else {
-                  val dsh = rank.join(dangling, Seq("node"), "left_semi")
-                    .agg(coalesce(sum(expr(s"(85 * r) div ${100L * nSeeds}")), lit(0L))
-                      .as("__dsh"))
-                  contribs
-                    .unionByName(nodeSeed.crossJoin(broadcast(dsh))
-                      .select(col("node"),
-                        when(col("__is") === 1, lit(base) + col("__dsh"))
-                          .otherwise(lit(0L)).as("c")))
-                    .groupBy(col("node")).agg(sum(col("c")).as("r"))
-                }
-              // one lineage cut per round — see pageRankFixedConverged
-              val materialized = next.localCheckpoint(true)
-              GenStore.freeLocal(rank)
-              rank = materialized
-              i += 1
-            }
-            rank
-            } finally nodeSeed.unpersist(false)
-            } finally ed.unpersist(false)
-          } finally dangling.unpersist(false)
-        } finally seed.unpersist(false)
-      } finally nodes.unpersist(false)
-    } finally e.unpersist(false)
+      val e = keep(edges.repartition(col("src")))
+      val nodes = keep(e.select(col("src").as("node"))
+        .union(e.select(col("dst").as("node"))).distinct())
+      val seed = seeds.map(s => keep(s.join(nodes, Seq("node"), "left_semi")))
+      val nSeeds = seed.map(_.count())
+      require(!nSeeds.contains(0L), "personalizedPageRank: no seed is a graph node")
+      // node-sized, computed once: the set whose mass must be
+      // redistributed, found in ONE pass over the node set
+      val dangling = keep(nodes
+        .join(e.select(col("src").as("node")).distinct(), Seq("node"), "left_anti"))
+      val nDangling = dangling.count()
+      // the node count also gates the per-round vector broadcast (vecSide)
+      val n = nodes.count()
+      // the teleport set and its denominator. With seeds, a node-sized
+      // (node, __is) vector computed ONCE: the seed-flag join is
+      // loop-invariant, so hoisting it saves one node-sized join per round
+      val tele = seed.fold(nodes)(s => keep(nodes
+        .join(s.withColumn("__is", lit(1)), Seq("node"), "left")
+        .select(col("node"), coalesce(col("__is"), lit(0)).as("__is"))))
+      val tN = nSeeds.getOrElse(n)
+      def gate(c: Column): Column =
+        if (seed.isEmpty) c else when(col("__is") === 1, c).otherwise(lit(0L))
+      val base = ((15L * scale) / 100L) / tN
+      // the out-degree is a property of the STATIC edge list, so it is
+      // folded into the persisted (src-partitioned) edges ONCE — (src,
+      // dst, od) — instead of re-joined every round: the per-iteration
+      // cost is exactly one edge×rank join + one dst aggregate, nothing
+      // edge-sized beyond that
+      val ed = keep(e.join(e.groupBy(col("src")).agg(outDeg), "src"))
+      // materialize ed and drop the raw edge cache NOW: the loop reads
+      // only ed and the node-sized caches, so holding both edge-sized
+      // caches would double the storage footprint for the whole iteration
+      ed.count()
+      e.unpersist(false)
+      var rank = tele.select(col("node"), gate(lit(scale / tN)).as("r"))
+      var i = 1
+      var ranIters = 0
+      var converged = false
+      while (i <= iters && !converged) {
+        val contribs = ed
+          .join(vecSide(rank.withColumnRenamed("node", "src"), n), "src")
+          .select(col("dst").as("node"), expr(contrib).as("c"))
+        // the per-node teleport term rides INTO the contribution aggregate
+        // as one teleport-set row per node (guide §2.4: the former
+        // node-list LEFT JOIN above the aggregate cost a second exchange +
+        // join stage per round; integer addition commutes, so summing the
+        // base row with the edge contributions is the identical r)
+        val teleport =
+          if (nDangling == 0) tele.select(col("node"), gate(lit(base)).as("c"))
+          else {
+            // exact integer dangling share per round: sum of the per-
+            // dangling-node floored share — the same decomposition the
+            // oracle's target-map replay sums row-wise, so totals agree
+            // bit-for-bit. The denominator is precomputed as a Long IN
+            // SCALA: an SQL-side `100 * $n` would parse n as an Int
+            // literal and overflow Int arithmetic beyond ~21.4M nodes.
+            // FOLDED into the round's checkpoint job as a broadcast 1-row
+            // aggregate instead of a separate `.head()` action — one
+            // action per iteration instead of two (the broadcast subquery
+            // still runs as a driver-coordinated exchange inside that
+            // action, but the extra collect-plus-resubmit round-trip is
+            // gone), which on a 10-round run is the dominant fixed cost at
+            // small SF and pure scheduler overhead at cluster scale.
+            // dsh keeps `rank` as a lazy reader inside `next`; it MUST be
+            // fully consumed by the eager localCheckpoint(true) below
+            // BEFORE GenStore.freeLocal(rank) runs (the no-live-lazy-
+            // readers contract) — a lazy checkpoint here would read freed
+            // blocks.
+            val dsh = rank.join(dangling, Seq("node"), "left_semi")
+              .agg(coalesce(sum(expr(s"(85 * r) div ${100L * tN}")), lit(0L))
+                .as("__dsh"))
+            tele.crossJoin(broadcast(dsh))
+              .select(col("node"), gate(lit(base) + col("__dsh")).as("c"))
+          }
+        val next = contribs.unionByName(teleport)
+          .groupBy(col("node")).agg(sum(col("c")).as("r"))
+        // one lineage cut per round. Fusing rounds into one action
+        // measured slower (10-round PPR at sf0.1: 8.2-9.5 s at 4 rounds
+        // per cut vs 5.2-6.6 s at 1 — AQE replans the deepened plan stage
+        // by stage), and a vector with a second reader (the dangling
+        // share, the convergence probe) would replay the fused rounds per
+        // reader.
+        val materialized = next.localCheckpoint(true)
+        if (epsilon >= 0) {
+          // one exact integer scalar per round, over two checkpointed
+          // node-sized vectors — the dangling-share cost class
+          val maxDelta = materialized
+            .join(rank.withColumnRenamed("r", "__pr"), "node")
+            .agg(coalesce(max(abs(col("r") - col("__pr"))), lit(0L)))
+            .head().getLong(0)
+          converged = maxDelta <= epsilon
+        }
+        // the previous round's checkpoint; a no-op on the lazy init
+        GenStore.freeLocal(rank)
+        rank = materialized
+        ranIters = i
+        i += 1
+      }
+      (rank, ranIters)
+    } finally cached.reverseIterator.foreach(_.unpersist(false))
   }
 
   /** Community detection by SYNCHRONOUS label propagation (LPA) over an
@@ -386,11 +365,8 @@ object Graph {
     * part of the operator's definition (the oracle unrolls exactly that
     * many rounds), not a convergence cap.
     *
-    * Scale shape: per round, one edge-join against the node-sized label
-    * vector (edges pre-partitioned by the join key ONCE, reused every
-    * round), one (node, label) count aggregate, one per-node min-struct
-    * fold — shuffle ∝ edges, the q128 cost class. Lineage is cut per
-    * round (localCheckpoint) with dead-checkpoint reclamation.
+    * Runs [[labelPropagationWeighted]]'s body at unit weight on the
+    * deduplicated edge list.
     */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
                        rounds: Int = 4): DataFrame = {
@@ -399,43 +375,8 @@ object Graph {
       .select(col(srcCol).cast("long").as("u"), col(dstCol).cast("long").as("v"))
       .filter(col("u") =!= col("v"))
     val und = a.unionByName(a.select(col("v").as("u"), col("u").as("v")))
-      .distinct()
-      // pre-partition by v once: every round's label join keys on v and
-      // reuses this exchange; only the node-sized label vector shuffles
-      .repartition(col("v")).persist()
-    try {
-      // loud, like hits: an edge-less graph has nothing to cluster, and a
-      // silently empty assignment would score as a perfect partition
-      require(!und.isEmpty, "labelPropagation: no edges — nothing to cluster")
-      var labels = und.select(col("v").as("node")).distinct()
-        .withColumn("label", col("node"))
-        .localCheckpoint(true)
-      // NO vecSide broadcast here: und is persisted PRE-PARTITIONED on
-      // the join key, so the shuffle join only exchanges the node-sized
-      // label vector — a broadcast saves nothing and costs a per-round
-      // broadcast job + driver collect (interleaved A/B on the q274
-      // graph: 4.5-4.9 s broadcast vs 3.0-4.0 s shuffle, 4/4 reps)
-      var i = 1
-      while (i <= rounds) {
-        val nbr = und
-          .join(labels.withColumnRenamed("node", "v"), "v")
-          .select(col("u").as("node"), col("label"))
-        val counts = nbr.unionByName(labels)
-          .groupBy(col("node"), col("label"))
-          .agg(count(lit(1)).as("c"))
-        // argmax by count, smallest label on ties: min of (-c, label)
-        val next = counts
-          .groupBy(col("node"))
-          .agg(min(struct((-col("c")).as("nc"), col("label").as("l")))
-            .as("m"))
-          .select(col("node"), col("m.l").as("label"))
-          .localCheckpoint(true)
-        GenStore.freeLocal(labels)
-        labels = next
-        i += 1
-      }
-      labels
-    } finally und.unpersist(false)
+      .distinct().withColumn("w", lit(1L))
+    propagateLabels(und, rounds, "labelPropagation")
   }
 
   /** WEIGHTED synchronous label propagation — [[labelPropagation]] where
@@ -453,36 +394,46 @@ object Graph {
     * per orientation — (u,v,w) plus (v,u,w) is one undirected edge of
     * weight 2w.
     *
-    * Degeneration law (spec-pinned): on an edge list where each
-    * undirected edge appears ONCE, unit weights reproduce
-    * [[labelPropagation]] bit-for-bit — every vote is 1, the self-vote
-    * is 1, and the tie order is identical.
-    *
-    * Scale shape: identical to the unweighted operator — per round one
-    * edge-join against the node-sized label vector over the
-    * pre-partitioned persisted adjacency, one (node, label) weight-sum
-    * aggregate, one min-struct fold; shuffle ∝ edges.
+    * On an edge list where each undirected edge appears ONCE, unit
+    * weights reproduce [[labelPropagation]], which is this body at unit
+    * weight.
     */
   def labelPropagationWeighted(edges: DataFrame, srcCol: String,
                                dstCol: String, weightCol: String,
                                rounds: Int = 4): DataFrame = {
     require(rounds >= 1, s"rounds must be positive, got $rounds")
-    val a = edges
-      .select(col(srcCol).cast("long").as("u"), col(dstCol).cast("long").as("v"),
-        col(weightCol).cast("long").as("w"))
-      .filter(col("u") =!= col("v"))
-    require(a.filter(col("w") <= 0L || col("w").isNull).isEmpty,
+    val a = weightedEdges(edges, srcCol, dstCol, weightCol,
       "labelPropagationWeighted: weights must be positive integers")
     val und = a.unionByName(a.select(col("v").as("u"), col("u").as("v"), col("w")))
       .groupBy(col("u"), col("v")).agg(sum(col("w")).as("w"))
-      .repartition(col("v")).persist()
+    propagateLabels(und, rounds, "labelPropagationWeighted")
+  }
+
+  /** The label-propagation rounds behind both LPA operators, over the
+    * symmetrized `(u, v, w)` adjacency.
+    *
+    * Scale shape: per round, one edge-join against the node-sized label
+    * vector (edges pre-partitioned by the join key ONCE, reused every
+    * round), one (node, label) weight-sum aggregate, one per-node
+    * min-struct fold — shuffle ∝ edges, the q128 cost class. Lineage is
+    * cut per round (localCheckpoint) with dead-checkpoint reclamation.
+    */
+  private def propagateLabels(adj: DataFrame, rounds: Int, op: String): DataFrame = {
+    // pre-partition by v once: every round's label join keys on v and
+    // reuses this exchange; only the node-sized label vector shuffles
+    val und = adj.repartition(col("v")).persist()
     try {
-      require(!und.isEmpty, "labelPropagationWeighted: no edges — nothing to cluster")
+      // loud, like hits: an edge-less graph has nothing to cluster, and a
+      // silently empty assignment would score as a perfect partition
+      require(!und.isEmpty, s"$op: no edges — nothing to cluster")
       var labels = und.select(col("v").as("node")).distinct()
         .withColumn("label", col("node"))
         .localCheckpoint(true)
-      // no vecSide broadcast — see the unweighted operator (und is
-      // pre-partitioned on the join key; the broadcast measured slower)
+      // NO vecSide broadcast here: und is persisted PRE-PARTITIONED on
+      // the join key, so the shuffle join only exchanges the node-sized
+      // label vector — a broadcast saves nothing and costs a per-round
+      // broadcast job + driver collect (interleaved A/B on the q274
+      // graph: 4.5-4.9 s broadcast vs 3.0-4.0 s shuffle, 4/4 reps)
       var i = 1
       while (i <= rounds) {
         val nbr = und
@@ -492,6 +443,7 @@ object Graph {
           .unionByName(labels.withColumn("w", lit(1L)))
           .groupBy(col("node"), col("label"))
           .agg(sum(col("w")).as("c"))
+        // argmax by weight, smallest label on ties: min of (-c, label)
         val next = counts
           .groupBy(col("node"))
           .agg(min(struct((-col("c")).as("nc"), col("label").as("l")))
@@ -559,13 +511,8 @@ object Graph {
     * the other direction — that operator drops such rows from its
     * n_nodes count, this one returns them untouched).
     *
-    * Scale shape: per stage, one edge-join against the node-sized label
-    * vector (adjacency pre-partitioned and persisted ONCE across all
-    * sweeps), two community-degree aggregates, one per-node min-struct
-    * fold — shuffle ∝ edges, the labelPropagation cost class; the
-    * moving side is parity-pruned before the join so each stage pays
-    * half the candidate work. Lineage is cut per stage with
-    * dead-checkpoint reclamation.
+    * Runs [[refineCommunitiesWeighted]]'s sweeps at unit weight on the
+    * deduplicated edge list.
     */
   def refineCommunities(edges: DataFrame, srcCol: String, dstCol: String,
                         assign: DataFrame, nodeCol: String,
@@ -575,100 +522,8 @@ object Graph {
       .select(col(srcCol).cast("long").as("u"), col(dstCol).cast("long").as("v"))
       .filter(col("u") =!= col("v"))
     val adj = a.unionByName(a.select(col("v").as("u"), col("u").as("v")))
-      .distinct()
-      .repartition(col("v")).persist()
-    try {
-      require(!adj.isEmpty, "refineCommunities: no edges — nothing to refine")
-      val lbl = assign
-        .select(col(nodeCol).cast("long").as("node"), col(labelCol).as("label"))
-        .distinct()
-      val nodes = adj.select(col("v").as("node")).distinct()
-      val chk = lbl.groupBy(col("node")).agg(count(lit(1)).as("nl"))
-        .join(nodes.withColumn("__g", lit(1)), Seq("node"), "full")
-        .agg(
-          sum(when(col("nl").isNull, 1L).otherwise(0L)).as("missing"),
-          sum(when(col("nl") > 1L, 1L).otherwise(0L)).as("multi"))
-        .collect()(0)
-      require(chk.getLong(0) == 0L,
-        "refineCommunities: assignment is missing graph nodes")
-      require(chk.getLong(1) == 0L,
-        "refineCommunities: a node has multiple labels — assignment must be a partition")
-      // round-invariant pieces hoisted out of the sweep stages (guide
-      // §1.2): |adj| = 2m exactly (symmetrized, distinct, no
-      // self-loops), collected ONCE as a scalar — the per-stage
-      // broadcast-aggregate twin re-counted the cached adjacency every
-      // stage — and the degree vector aggregated once and cached across
-      // all stages instead of twice per stage
-      val m = adj.count() / 2L
-      val deg = adj.groupBy(col("u").as("node")).agg(count(lit(1)).as("k"))
-        .persist()
-      try {
-      var cur = lbl.localCheckpoint(true)
-
-      // one parity stage: only nodes with node % 2 == parity may move,
-      // all evaluated against `cur`, applied simultaneously.
-      // NO vecSide broadcasts in these joins: adj is persisted
-      // PRE-PARTITIONED on the join key, so the planner's shuffle joins
-      // only exchange node-sized sides — the broadcast variant measured
-      // consistently SLOWER (interleaved A/B on the q289 pipeline:
-      // 15.2-17.1 s broadcast vs 11.9-13.2 s shuffle, 3/3 reps).
-      def stage(cur: DataFrame, parity: Int): DataFrame = {
-        // community-sized, consumed TWICE below (d_a and d_b lookups) —
-        // materialized once so each consumer reads blocks instead of
-        // re-running the degree×vector aggregate; freed after the stage
-        // output lands
-        val dC = deg.join(cur, "node")
-          .groupBy(col("label")).agg(sum(col("k")).as("d_tot"))
-          .localCheckpoint(true)
-        // candidate links: edges OUT of this stage's movable nodes,
-        // grouped by the neighbor's community; the mover's own label
-        // rides along from the SAME vector join, and its
-        // internal-link count k_ia is a window sum over the node's own
-        // rows — the previous ka self-join re-ran the edge join a
-        // second time per stage
-        val kicl = adj.filter(pmod(col("u"), lit(2)) === parity)
-          .join(cur.select(col("node").as("v"), col("label").as("nl")), "v")
-          .groupBy(col("u").as("node"), col("nl"))
-          .agg(count(lit(1)).as("kc"))
-          .join(cur, "node")
-        val ka = coalesce(
-          sum(when(col("nl") === col("label"), col("kc")))
-            .over(org.apache.spark.sql.expressions.Window
-              .partitionBy(col("node"))), lit(0L))
-        val cand = kicl
-          .withColumn("ka", ka)
-          .filter(col("nl") =!= col("label"))
-          .join(deg, "node")
-          .join(dC.select(col("label"), col("d_tot").as("d_a")), "label")
-          .join(dC.select(col("label").as("nl"), col("d_tot").as("d_b")), "nl")
-          .withColumn("delta_num",
-            lit(4L) * lit(m) * (col("kc") - col("ka")) -
-              lit(2L) * col("k") * (col("d_b") - col("d_a") + col("k")))
-          .filter(col("delta_num") > 0L)
-        val best = cand
-          .groupBy(col("node"))
-          .agg(min(struct((-col("delta_num")).as("nd"), col("nl").as("l"))).as("mv"))
-          .select(col("node"), col("mv.l").as("new_label"))
-        val out = cur.join(best, Seq("node"), "left")
-          .select(col("node"),
-            coalesce(col("new_label"), col("label")).as("label"))
-          .localCheckpoint(true)
-        GenStore.freeLocal(dC)
-        out
-      }
-
-      var s = 0
-      while (s < sweeps) {
-        val even = stage(cur, 0)
-        GenStore.freeLocal(cur)
-        val odd = stage(even, 1)
-        GenStore.freeLocal(even)
-        cur = odd
-        s += 1
-      }
-      cur
-      } finally deg.unpersist(false)
-    } finally adj.unpersist(false)
+      .distinct().withColumn("w", lit(1L))
+    refineOn(adj, assign, nodeCol, labelCol, sweeps, "refineCommunities")
   }
 
   /** WEIGHTED local-move refinement — [[refineCommunities]] climbing
@@ -681,9 +536,8 @@ object Graph {
     * s_c community strength sums (a seating i, b not). Everything else —
     * parity stages, positive-only acceptance, smallest-label ties,
     * neighbor-communities-only targets, the one-pass partition guards,
-    * checkpoint discipline — is the unweighted operator verbatim, and
-    * unit weights on a deduped edge list degenerate to it bit-for-bit
-    * (spec law). The natural composition is
+    * checkpoint discipline — is the unweighted operator's, which runs
+    * these sweeps at unit weight. The natural composition is
     * [[labelPropagationWeighted]] → this → [[modularityWeighted]].
     */
   def refineCommunitiesWeighted(edges: DataFrame, srcCol: String,
@@ -691,41 +545,36 @@ object Graph {
                                 assign: DataFrame, nodeCol: String,
                                 labelCol: String, sweeps: Int = 1): DataFrame = {
     require(sweeps >= 1, s"sweeps must be positive, got $sweeps")
-    val a = edges
-      .select(col(srcCol).cast("long").as("u"), col(dstCol).cast("long").as("v"),
-        col(weightCol).cast("long").as("w"))
-      .filter(col("u") =!= col("v"))
-    require(a.filter(col("w") <= 0L || col("w").isNull).isEmpty,
+    val a = weightedEdges(edges, srcCol, dstCol, weightCol,
       "refineCommunitiesWeighted: weights must be positive integers")
     val adj = a.unionByName(a.select(col("v").as("u"), col("u").as("v"), col("w")))
       .groupBy(col("u"), col("v")).agg(sum(col("w")).as("w"))
-      .repartition(col("v")).persist()
+    refineOn(adj, assign, nodeCol, labelCol, sweeps, "refineCommunitiesWeighted")
+  }
+
+  /** Both refine operators past their edge reading: pre-partitions and
+    * persists the symmetrized `(u, v, w)` adjacency, guards the
+    * assignment, and runs [[refineWeightedSweeps]] on it.
+    */
+  private def refineOn(edges: DataFrame, assign: DataFrame, nodeCol: String,
+                       labelCol: String, sweeps: Int, op: String): DataFrame = {
+    val adj = edges.repartition(col("v")).persist()
     try {
-      require(!adj.isEmpty, "refineCommunitiesWeighted: no edges — nothing to refine")
+      require(!adj.isEmpty, s"$op: no edges — nothing to refine")
       val lbl = assign
         .select(col(nodeCol).cast("long").as("node"), col(labelCol).as("label"))
         .distinct()
-      val nodes = adj.select(col("v").as("node")).distinct()
-      val chk = lbl.groupBy(col("node")).agg(count(lit(1)).as("nl"))
-        .join(nodes.withColumn("__g", lit(1)), Seq("node"), "full")
-        .agg(
-          sum(when(col("nl").isNull, 1L).otherwise(0L)).as("missing"),
-          sum(when(col("nl") > 1L, 1L).otherwise(0L)).as("multi"))
-        .collect()(0)
-      require(chk.getLong(0) == 0L,
-        "refineCommunitiesWeighted: assignment is missing graph nodes")
-      require(chk.getLong(1) == 0L,
-        "refineCommunitiesWeighted: a node has multiple labels — assignment must be a partition")
+      requirePartition(op, lbl, adj.select(col("v").as("node")).distinct())
       refineWeightedSweeps(adj, None, lbl, sweeps)
     } finally adj.unpersist(false)
   }
 
-  /** The weighted local-move sweep loop shared by
-    * [[refineCommunitiesWeighted]] (simple graphs — `selfStr` = None)
-    * and the contracted community graphs of [[louvainCommunities]],
-    * where a super-node carries a SELF-LOOP (its community's internal
-    * weight). `selfStr` rows are `(node, sw)` with `sw` in STRENGTH
-    * units — 2 × the node's self-loop weight, the standard convention
+  /** The weighted local-move sweep loop shared by both refine operators
+    * (simple graphs — `selfStr` = None) and the contracted community
+    * graphs of [[louvainCommunities]], where a super-node carries a
+    * SELF-LOOP (its community's internal weight). `selfStr` rows are
+    * `(node, sw)` with `sw` in STRENGTH units — 2 × the node's self-loop
+    * weight, the standard convention
     * under which the contracted graph's modularity equals the expanded
     * partition's on the original graph exactly (the self-loop moves
     * with its node, so it cancels out of the linear delta term, but it
@@ -738,6 +587,14 @@ object Graph {
     * `adj` must be the symmetrized, self-loop-free, parallel-summed
     * adjacency, pre-partitioned and persisted by the caller; `lbl` a
     * guarded partition of its nodes.
+    *
+    * Scale shape: per stage, one edge-join against the node-sized label
+    * vector (adjacency pre-partitioned and persisted ONCE across all
+    * sweeps), two community-strength aggregates, one per-node
+    * min-struct fold — shuffle ∝ edges, the labelPropagation cost
+    * class; the moving side is parity-pruned before the join so each
+    * stage pays half the candidate work. Lineage is cut per stage with
+    * dead-checkpoint reclamation.
     */
   private def refineWeightedSweeps(adj: DataFrame, selfStr: Option[DataFrame],
                                    lbl: DataFrame, sweeps: Int): DataFrame = {
@@ -763,8 +620,13 @@ object Graph {
     try {
     var cur = lbl.localCheckpoint(true)
 
-    // no vecSide broadcasts in these joins — adj is pre-partitioned on
-    // the join key; see refineCommunities' stage for the A/B numbers
+    // one parity stage: only nodes with node % 2 == parity may move,
+    // all evaluated against `cur`, applied simultaneously.
+    // NO vecSide broadcasts in these joins: adj is persisted
+    // PRE-PARTITIONED on the join key, so the planner's shuffle joins
+    // only exchange node-sized sides — the broadcast variant measured
+    // consistently SLOWER (interleaved A/B on the q289 pipeline:
+    // 15.2-17.1 s broadcast vs 11.9-13.2 s shuffle, 3/3 reps).
     def stage(cur: DataFrame, parity: Int): DataFrame = {
       // community-sized, consumed TWICE below (s_a and s_b lookups) —
       // materialized once so each consumer reads blocks instead of
@@ -845,32 +707,14 @@ object Graph {
   def contractCommunities(edges: DataFrame, srcCol: String, dstCol: String,
                           weightCol: String, assign: DataFrame,
                           nodeCol: String, labelCol: String): DataFrame = {
-    val a = edges
-      .select(col(srcCol).cast("long").as("u"), col(dstCol).cast("long").as("v"),
-        col(weightCol).cast("long").as("w"))
-      .filter(col("u") =!= col("v"))
-    require(a.filter(col("w") <= 0L || col("w").isNull).isEmpty,
+    val a = weightedEdges(edges, srcCol, dstCol, weightCol,
       "contractCommunities: weights must be positive integers")
-    val und = a
-      .select(least(col("u"), col("v")).as("u"),
-        greatest(col("u"), col("v")).as("v"), col("w"))
-      .groupBy(col("u"), col("v")).agg(sum(col("w")).as("w"))
+    val und = canonical(a)
     val lbl = assign
       .select(col(nodeCol).cast("long").as("node"), col(labelCol).cast("long").as("label"))
       .distinct()
-    val nodes = und.select(col("u").as("node"))
-      .unionByName(und.select(col("v").as("node"))).distinct()
-    val chk = lbl.groupBy(col("node")).agg(count(lit(1)).as("nl"))
-      .join(nodes.withColumn("__g", lit(1)), Seq("node"), "full")
-      .agg(
-        sum(when(col("nl").isNull && col("__g").isNotNull, 1L).otherwise(0L))
-          .as("missing"),
-        sum(when(col("nl") > 1L, 1L).otherwise(0L)).as("multi"))
-      .collect()(0)
-    require(chk.getLong(0) == 0L,
-      "contractCommunities: assignment is missing graph nodes")
-    require(chk.getLong(1) == 0L,
-      "contractCommunities: a node has multiple labels — assignment must be a partition")
+    requirePartition("contractCommunities", lbl, und.select(col("u").as("node"))
+      .unionByName(und.select(col("v").as("node"))).distinct())
     und
       .join(lbl.select(col("node").as("u"), col("label").as("la")), "u")
       .join(lbl.select(col("node").as("v"), col("label").as("lb")), "v")
@@ -915,22 +759,14 @@ object Graph {
                          nodeCol: String, labelCol: String,
                          levels: Int = 2, sweeps: Int = 1): DataFrame = {
     require(levels >= 1, s"levels must be positive, got $levels")
-    val a = edges
-      .select(col(srcCol).cast("long").as("u"), col(dstCol).cast("long").as("v"),
-        col(weightCol).cast("long").as("w"))
-      .filter(col("u") =!= col("v"))
-    require(a.filter(col("w") <= 0L || col("w").isNull).isEmpty,
+    val a = weightedEdges(edges, srcCol, dstCol, weightCol,
       "louvainCommunities: weights must be positive integers")
     // canonicalize + guard the ORIGINAL edge list exactly ONCE: the
     // level-1 sweep's adjacency and the seed contraction both derive
     // from this one materialization (calling the public refine +
     // contract operators back-to-back would scan and re-guard the full
     // edge list twice — a duplicated full pass at 100 TB)
-    val und = a
-      .select(least(col("u"), col("v")).as("u"),
-        greatest(col("u"), col("v")).as("v"), col("w"))
-      .groupBy(col("u"), col("v")).agg(sum(col("w")).as("w"))
-      .localCheckpoint(true)
+    val und = canonical(a).localCheckpoint(true)
     require(!und.isEmpty, "louvainCommunities: no edges — nothing to cluster")
     val adj = und
       .unionByName(und.select(col("v").as("u"), col("u").as("v"), col("w")))
@@ -941,17 +777,8 @@ object Graph {
       val lbl = assign
         .select(col(nodeCol).cast("long").as("node"), col(labelCol).as("label"))
         .distinct()
-      val nodes = adj.select(col("v").as("node")).distinct()
-      val chk = lbl.groupBy(col("node")).agg(count(lit(1)).as("nl"))
-        .join(nodes.withColumn("__g", lit(1)), Seq("node"), "full")
-        .agg(
-          sum(when(col("nl").isNull, 1L).otherwise(0L)).as("missing"),
-          sum(when(col("nl") > 1L, 1L).otherwise(0L)).as("multi"))
-        .collect()(0)
-      require(chk.getLong(0) == 0L,
-        "louvainCommunities: assignment is missing graph nodes")
-      require(chk.getLong(1) == 0L,
-        "louvainCommunities: a node has multiple labels — assignment must be a partition")
+      requirePartition("louvainCommunities", lbl,
+        adj.select(col("v").as("node")).distinct())
       cur = refineWeightedSweeps(adj, None, lbl, sweeps)
       // seed contraction from the SAME canonical edges (cur covers every
       // graph node by construction, so no re-guard is needed)
@@ -1044,240 +871,26 @@ object Graph {
     * that, drop to per-million-edge units before scoring.
     *
     * Returns one row per community — `(label, n_nodes, m_in, d_tot,
-    * contrib_num)` — each carrying the global `m` and `q_ppm`
-    * (constant columns via a broadcast 1-row cross join, never a
-    * driver action). Nodes absent from `assign` are rejected loudly:
-    * a silently-dropped node would understate d_c and overstate Q.
-    * The DUAL direction is asymmetric BY DESIGN: assignment rows for
-    * nodes absent from the graph (a stale assignment scored against a
-    * shrunk edge list, or genuinely isolated nodes) are dropped — an
-    * edge-less node has degree 0 and internal-edge count 0, so its
-    * exact contribution to Q is 0 and dropping it cannot move the
-    * score; only its `n_nodes` seat disappears.
-    *
-    * Scale shape: one symmetrize+distinct pass, one degree aggregate,
-    * one edge×assign join (both endpoints) + internal-edge aggregate,
-    * one community aggregate — shuffle ∝ edges, no iteration, no
-    * windows. The natural composition is [[labelPropagation]] → this
+    * contrib_num)` — each carrying the global `m` and `q_ppm`. Nodes
+    * absent from `assign` are rejected loudly: a silently-dropped node
+    * would understate d_c and overstate Q. The DUAL direction is
+    * asymmetric BY DESIGN: assignment rows for nodes absent from the
+    * graph (a stale assignment scored against a shrunk edge list, or
+    * genuinely isolated nodes) are dropped — an edge-less node has
+    * degree 0 and internal-edge count 0, so its exact contribution to Q
+    * is 0 and dropping it cannot move the score; only its `n_nodes` seat
+    * disappears. The natural composition is [[labelPropagation]] → this
     * (assign, then score the assignment).
+    *
+    * Runs [[modularityWeighted]]'s body at unit weight on the
+    * deduplicated edge list.
     */
   def modularity(edges: DataFrame, srcCol: String, dstCol: String,
                  assign: DataFrame, nodeCol: String,
                  labelCol: String): DataFrame = {
-    val a0 = edges
-      .select(col(srcCol).cast("long").as("u"), col(dstCol).cast("long").as("v"))
-      .filter(col("u") =!= col("v"))
-    // persist (not localCheckpoint) + finally-unpersist: a checkpoint's
-    // edge-sized blocks would stay pinned until driver GC — on a score-
-    // every-assignment cadence that leak compounds (the GenStore.freeLocal
-    // lesson). The returned frame is materialized community-sized below,
-    // so nothing reads und after the unpersist.
-    val und = a0
-      .select(least(col("u"), col("v")).as("u"),
-        greatest(col("u"), col("v")).as("v"))
-      .distinct()
-      .persist()
-    try {
-      val lbl = assign
-        .select(col(nodeCol).cast("long").as("node"), col(labelCol).as("lbl"))
-        .distinct()
-      val nodes = und.select(col("u").as("node"))
-        .unionByName(und.select(col("v").as("node"))).distinct()
-      // BOTH partition guards in ONE aggregate pass (one job, not two):
-      // a graph node with no label would understate d_c and overstate Q;
-      // a node carrying TWO labels would double-count its degree and
-      // shared-label internal edges. Full outer join of per-node label
-      // counts vs graph nodes: nl IS NULL on a graph-only row = missing;
-      // nl > 1 = not a partition; a lbl-only row (__g IS NULL) is the
-      // documented isolated-node drop, contribution exactly 0.
-      val chk = lbl.groupBy(col("node")).agg(count(lit(1)).as("nl"))
-        .join(nodes.withColumn("__g", lit(1)), Seq("node"), "full")
-        .agg(
-          sum(when(col("nl").isNull, 1L).otherwise(0L)).as("missing"),
-          sum(when(col("nl") > 1L, 1L).otherwise(0L)).as("multi"))
-        .collect()(0)
-      require(chk.getLong(0) == 0L,
-        "modularity: assignment is missing graph nodes — score would be wrong")
-      require(chk.getLong(1) == 0L,
-        "modularity: a node has multiple labels — assignment must be a partition")
-      val deg = und.select(explode(array(col("u"), col("v"))).as("node"))
-        .groupBy(col("node")).agg(count(lit(1)).as("d"))
-      val dC = deg.join(lbl, "node")
-        .groupBy(col("lbl")).agg(sum(col("d")).as("d_tot"),
-          count(lit(1)).as("n_nodes"))
-      val mIn = und
-        .join(lbl.select(col("node").as("u"), col("lbl").as("lu")), "u")
-        .join(lbl.select(col("node").as("v"), col("lbl").as("lv")), "v")
-        .filter(col("lu") === col("lv"))
-        .groupBy(col("lu").as("lbl")).agg(count(lit(1)).as("m_in"))
-      val mDf = und.agg(count(lit(1)).as("m"))
-      val perC = dC.join(mIn, Seq("lbl"), "left")
-        .select(col("lbl").as("label"), col("n_nodes"),
-          coalesce(col("m_in"), lit(0L)).as("m_in"), col("d_tot"))
-        .crossJoin(broadcast(mDf))
-        .withColumn("contrib_num",
-          lit(4L) * col("m") * col("m_in") - col("d_tot") * col("d_tot"))
-      val qDf = perC.agg(sum(col("contrib_num")).as("__s"),
-        max(col("m")).as("__m"))
-        .select(
-          (signum(col("__s")).cast("long") *
-            expr("(abs(__s) * 1000000) div (4 * __m * __m)")).as("q_ppm"))
-      // community-sized (≤ #labels rows) — the only retained blocks
-      perC.crossJoin(broadcast(qDf))
-        .select(col("label"), col("n_nodes"), col("m_in"), col("d_tot"),
-          col("contrib_num"), col("m"), col("q_ppm"))
-        .localCheckpoint(true)
-    } finally und.unpersist(false)
-  }
-
-  /** EXACT per-community conductance — the local counterpart of
-    * [[modularity]]'s global score: for community c,
-    *
-    *   φ(c) = cut(c) / min(vol(c), vol(V) − vol(c))
-    *
-    * with cut(c) the number of undirected edges with exactly one end in
-    * c and vol the degree sum (vol(V) = 2m). Low φ = a well-separated
-    * community; the screening metric for "is this cluster real or an
-    * artifact of the assignment". Exact integers end-to-end:
-    * `cond_ppm = (cut·10⁶) div min(d_tot, 2m − d_tot)`, with the
-    * whole-graph community (denominator 0, cut 0) defined as 0. Same
-    * partition contract, loud guards, isolated-node-drop asymmetry
-    * (an edge-less assignment row has volume 0 and cut 0 — dropping it
-    * cannot move any community's φ), and persist/materialize discipline
-    * as [[modularity]].
-    *
-    * Scale shape: one symmetrize+distinct pass, one degree aggregate,
-    * one edge×assign join + per-community cut/internal counts — shuffle
-    * ∝ edges, no iteration. Returns `(label, n_nodes, cut, d_tot,
-    * cond_ppm)`.
-    */
-  def conductance(edges: DataFrame, srcCol: String, dstCol: String,
-                  assign: DataFrame, nodeCol: String,
-                  labelCol: String): DataFrame = {
-    val a0 = edges
-      .select(col(srcCol).cast("long").as("u"), col(dstCol).cast("long").as("v"))
-      .filter(col("u") =!= col("v"))
-    val und = a0
-      .select(least(col("u"), col("v")).as("u"),
-        greatest(col("u"), col("v")).as("v"))
-      .distinct()
-      .persist()
-    try {
-      val lbl = assign
-        .select(col(nodeCol).cast("long").as("node"), col(labelCol).as("lbl"))
-        .distinct()
-      val nodes = und.select(col("u").as("node"))
-        .unionByName(und.select(col("v").as("node"))).distinct()
-      // both partition guards in one aggregate pass — see modularity
-      val chk = lbl.groupBy(col("node")).agg(count(lit(1)).as("nl"))
-        .join(nodes.withColumn("__g", lit(1)), Seq("node"), "full")
-        .agg(
-          sum(when(col("nl").isNull, 1L).otherwise(0L)).as("missing"),
-          sum(when(col("nl") > 1L, 1L).otherwise(0L)).as("multi"))
-        .collect()(0)
-      require(chk.getLong(0) == 0L,
-        "conductance: assignment is missing graph nodes — score would be wrong")
-      require(chk.getLong(1) == 0L,
-        "conductance: a node has multiple labels — assignment must be a partition")
-      val deg = und.select(explode(array(col("u"), col("v"))).as("node"))
-        .groupBy(col("node")).agg(count(lit(1)).as("d"))
-      val dC = deg.join(lbl, "node")
-        .groupBy(col("lbl")).agg(sum(col("d")).as("d_tot"),
-          count(lit(1)).as("n_nodes"))
-      // a boundary edge (lu != lv) contributes to BOTH sides' cuts
-      val tagged = und
-        .join(lbl.select(col("node").as("u"), col("lbl").as("lu")), "u")
-        .join(lbl.select(col("node").as("v"), col("lbl").as("lv")), "v")
-        .filter(col("lu") =!= col("lv"))
-      val cuts = tagged.select(col("lu").as("lbl"))
-        .unionByName(tagged.select(col("lv").as("lbl")))
-        .groupBy(col("lbl")).agg(count(lit(1)).as("cut"))
-      val mDf = und.agg((count(lit(1)) * 2L).as("vol_all"))
-      // community-sized — the only retained blocks
-      dC.join(cuts, Seq("lbl"), "left")
-        .crossJoin(broadcast(mDf))
-        .withColumn("cut", coalesce(col("cut"), lit(0L)))
-        .select(col("lbl").as("label"), col("n_nodes"), col("cut"),
-          col("d_tot"),
-          expr("""CASE WHEN least(d_tot, vol_all - d_tot) = 0 THEN CAST(0 AS BIGINT)
-                  ELSE (cut * 1000000) div least(d_tot, vol_all - d_tot)
-                  END""").as("cond_ppm"))
-        .localCheckpoint(true)
-    } finally und.unpersist(false)
-  }
-
-  /** WEIGHTED per-community conductance — [[conductance]] with every
-    * count an integer weight sum, completing the weighted community
-    * suite (weighted LPA assigns, Q_w scores globally, THIS scores
-    * locally): φ_w(c) = cut_w(c) / min(vol_w(c), 2W − vol_w(c)) in
-    * exact integer ppm, with cut_w the summed weight of boundary edges,
-    * vol_w the summed strength of members, W the total edge weight. A
-    * community tied to the outside by one heavy edge is exactly as
-    * leaky as one tied by many light ones — the multiplicity the
-    * unweighted score discards. Edge conventions are
-    * [[modularityWeighted]]'s: positive integer weights (loud
-    * otherwise), undirected, parallel rows sum across orientations;
-    * unit weights on a deduped edge list reproduce [[conductance]]
-    * bit-for-bit (spec law). Same one-pass partition guards, same
-    * community-sized output `(label, n_nodes, cut_w, vol_w, cond_ppm)`.
-    */
-  def conductanceWeighted(edges: DataFrame, srcCol: String, dstCol: String,
-                          weightCol: String, assign: DataFrame,
-                          nodeCol: String, labelCol: String): DataFrame = {
-    val a0 = edges
-      .select(col(srcCol).cast("long").as("u"), col(dstCol).cast("long").as("v"),
-        col(weightCol).cast("long").as("w"))
-      .filter(col("u") =!= col("v"))
-    require(a0.filter(col("w") <= 0L || col("w").isNull).isEmpty,
-      "conductanceWeighted: weights must be positive integers")
-    val und = a0
-      .select(least(col("u"), col("v")).as("u"),
-        greatest(col("u"), col("v")).as("v"), col("w"))
-      .groupBy(col("u"), col("v")).agg(sum(col("w")).as("w"))
-      .persist()
-    try {
-      val lbl = assign
-        .select(col(nodeCol).cast("long").as("node"), col(labelCol).as("lbl"))
-        .distinct()
-      val nodes = und.select(col("u").as("node"))
-        .unionByName(und.select(col("v").as("node"))).distinct()
-      val chk = lbl.groupBy(col("node")).agg(count(lit(1)).as("nl"))
-        .join(nodes.withColumn("__g", lit(1)), Seq("node"), "full")
-        .agg(
-          sum(when(col("nl").isNull, 1L).otherwise(0L)).as("missing"),
-          sum(when(col("nl") > 1L, 1L).otherwise(0L)).as("multi"))
-        .collect()(0)
-      require(chk.getLong(0) == 0L,
-        "conductanceWeighted: assignment is missing graph nodes — score would be wrong")
-      require(chk.getLong(1) == 0L,
-        "conductanceWeighted: a node has multiple labels — assignment must be a partition")
-      val strength = und
-        .select(explode(array(
-          struct(col("u").as("node"), col("w")),
-          struct(col("v").as("node"), col("w")))).as("s"))
-        .groupBy(col("s.node").as("node")).agg(sum(col("s.w")).as("d"))
-      val dC = strength.join(lbl, "node")
-        .groupBy(col("lbl")).agg(sum(col("d")).as("vol_w"),
-          count(lit(1)).as("n_nodes"))
-      // a boundary edge (lu != lv) contributes its WEIGHT to both cuts
-      val tagged = und
-        .join(lbl.select(col("node").as("u"), col("lbl").as("lu")), "u")
-        .join(lbl.select(col("node").as("v"), col("lbl").as("lv")), "v")
-        .filter(col("lu") =!= col("lv"))
-      val cuts = tagged.select(col("lu").as("lbl"), col("w"))
-        .unionByName(tagged.select(col("lv").as("lbl"), col("w")))
-        .groupBy(col("lbl")).agg(sum(col("w")).as("cut_w"))
-      val mDf = und.agg((sum(col("w")) * 2L).as("vol_all"))
-      dC.join(cuts, Seq("lbl"), "left")
-        .crossJoin(broadcast(mDf))
-        .withColumn("cut_w", coalesce(col("cut_w"), lit(0L)))
-        .select(col("lbl").as("label"), col("n_nodes"), col("cut_w"),
-          col("vol_w"),
-          expr("""CASE WHEN least(vol_w, vol_all - vol_w) = 0 THEN CAST(0 AS BIGINT)
-                  ELSE (cut_w * 1000000) div least(vol_w, vol_all - vol_w)
-                  END""").as("cond_ppm"))
-        .localCheckpoint(true)
-    } finally und.unpersist(false)
+    scoreCommunities(unitCanonical(edges, srcCol, dstCol), assign, nodeCol,
+        labelCol, "modularity")(modularityTable)
+      .toDF("label", "n_nodes", "m_in", "d_tot", "contrib_num", "m", "q_ppm")
   }
 
   /** WEIGHTED exact modularity — [[modularity]] with every count
@@ -1294,45 +907,47 @@ object Graph {
     *
     * Edge semantics are [[labelPropagationWeighted]]'s: positive integer
     * weights (loud otherwise), undirected, parallel rows sum — including
-    * one row per orientation. Degeneration law (spec-pinned): on an edge
-    * list where each undirected edge appears once, unit weights
-    * reproduce [[modularity]]'s table bit-for-bit (every count IS the
-    * weight sum). Same partition contract, one-pass folded guards,
-    * isolated-node-drop asymmetry, persist/materialize discipline, and
-    * overflow budget (W in place of m) as the unweighted operator.
+    * one row per orientation. Same partition contract, one-pass folded
+    * guards, isolated-node-drop asymmetry, and overflow budget (W in
+    * place of m) as [[modularity]], which is this score at unit weight.
     *
     * Returns `(label, n_nodes, w_in, s_tot, contrib_num, w, q_ppm)`.
     */
   def modularityWeighted(edges: DataFrame, srcCol: String, dstCol: String,
                          weightCol: String, assign: DataFrame,
                          nodeCol: String, labelCol: String): DataFrame = {
-    val a0 = edges
-      .select(col(srcCol).cast("long").as("u"), col(dstCol).cast("long").as("v"),
-        col(weightCol).cast("long").as("w"))
-      .filter(col("u") =!= col("v"))
-    require(a0.filter(col("w") <= 0L || col("w").isNull).isEmpty,
+    val a = weightedEdges(edges, srcCol, dstCol, weightCol,
       "modularityWeighted: weights must be positive integers")
-    val und = a0
-      .select(least(col("u"), col("v")).as("u"),
-        greatest(col("u"), col("v")).as("v"), col("w"))
-      .groupBy(col("u"), col("v")).agg(sum(col("w")).as("w"))
-      .persist()
+    scoreCommunities(canonical(a), assign, nodeCol, labelCol,
+      "modularityWeighted")(modularityTable)
+  }
+
+  /** The community scores' shared part, over the canonical `(u, v, w)`
+    * edge list (`u < v`, one row per undirected edge): persists it,
+    * guards the assignment, and hands `score` the edges, the `(node,
+    * lbl)` assignment and the per-community `(lbl, s_tot, n_nodes)`
+    * strength sums. Only the community-sized result is materialized.
+    *
+    * Scale shape: one canonicalize+sum pass, one strength aggregate, one
+    * edge×assign join (both endpoints) + per-community sums — shuffle ∝
+    * edges, no iteration, no windows.
+    */
+  private def scoreCommunities(edges: DataFrame, assign: DataFrame,
+                               nodeCol: String, labelCol: String, op: String)(
+      score: (DataFrame, DataFrame, DataFrame) => DataFrame): DataFrame = {
+    // persist (not localCheckpoint) + finally-unpersist: a checkpoint's
+    // edge-sized blocks would stay pinned until driver GC — on a score-
+    // every-assignment cadence that leak compounds (the GenStore.freeLocal
+    // lesson). The returned frame is materialized community-sized below,
+    // so nothing reads und after the unpersist.
+    val und = edges.persist()
     try {
       val lbl = assign
         .select(col(nodeCol).cast("long").as("node"), col(labelCol).as("lbl"))
         .distinct()
-      val nodes = und.select(col("u").as("node"))
-        .unionByName(und.select(col("v").as("node"))).distinct()
-      val chk = lbl.groupBy(col("node")).agg(count(lit(1)).as("nl"))
-        .join(nodes.withColumn("__g", lit(1)), Seq("node"), "full")
-        .agg(
-          sum(when(col("nl").isNull, 1L).otherwise(0L)).as("missing"),
-          sum(when(col("nl") > 1L, 1L).otherwise(0L)).as("multi"))
-        .collect()(0)
-      require(chk.getLong(0) == 0L,
-        "modularityWeighted: assignment is missing graph nodes — score would be wrong")
-      require(chk.getLong(1) == 0L,
-        "modularityWeighted: a node has multiple labels — assignment must be a partition")
+      requirePartition(op, lbl, und.select(col("u").as("node"))
+        .unionByName(und.select(col("v").as("node"))).distinct(),
+        " — score would be wrong")
       val strength = und
         .select(explode(array(
           struct(col("u").as("node"), col("w")),
@@ -1341,28 +956,106 @@ object Graph {
       val sC = strength.join(lbl, "node")
         .groupBy(col("lbl")).agg(sum(col("d")).as("s_tot"),
           count(lit(1)).as("n_nodes"))
-      val wIn = und
-        .join(lbl.select(col("node").as("u"), col("lbl").as("lu")), "u")
-        .join(lbl.select(col("node").as("v"), col("lbl").as("lv")), "v")
-        .filter(col("lu") === col("lv"))
-        .groupBy(col("lu").as("lbl")).agg(sum(col("w")).as("w_in"))
-      val wDf = und.agg(sum(col("w")).as("w"))
-      val perC = sC.join(wIn, Seq("lbl"), "left")
-        .select(col("lbl").as("label"), col("n_nodes"),
-          coalesce(col("w_in"), lit(0L)).as("w_in"), col("s_tot"))
-        .crossJoin(broadcast(wDf))
-        .withColumn("contrib_num",
-          lit(4L) * col("w") * col("w_in") - col("s_tot") * col("s_tot"))
-      val qDf = perC.agg(sum(col("contrib_num")).as("__s"),
-        max(col("w")).as("__w"))
-        .select(
-          (signum(col("__s")).cast("long") *
-            expr("(abs(__s) * 1000000) div (4 * __w * __w)")).as("q_ppm"))
-      perC.crossJoin(broadcast(qDf))
-        .select(col("label"), col("n_nodes"), col("w_in"), col("s_tot"),
-          col("contrib_num"), col("w"), col("q_ppm"))
-        .localCheckpoint(true)
+      // community-sized (≤ #labels rows) — the only retained blocks
+      score(und, lbl, sC).localCheckpoint(true)
     } finally und.unpersist(false)
+  }
+
+  /** [[modularityWeighted]]'s table from [[scoreCommunities]]' parts. */
+  private def modularityTable(und: DataFrame, lbl: DataFrame,
+                              sC: DataFrame): DataFrame = {
+    val wIn = und
+      .join(lbl.select(col("node").as("u"), col("lbl").as("lu")), "u")
+      .join(lbl.select(col("node").as("v"), col("lbl").as("lv")), "v")
+      .filter(col("lu") === col("lv"))
+      .groupBy(col("lu").as("lbl")).agg(sum(col("w")).as("w_in"))
+    val wDf = und.agg(sum(col("w")).as("w"))
+    val perC = sC.join(wIn, Seq("lbl"), "left")
+      .select(col("lbl").as("label"), col("n_nodes"),
+        coalesce(col("w_in"), lit(0L)).as("w_in"), col("s_tot"))
+      .crossJoin(broadcast(wDf))
+      .withColumn("contrib_num",
+        lit(4L) * col("w") * col("w_in") - col("s_tot") * col("s_tot"))
+    val qDf = perC.agg(sum(col("contrib_num")).as("__s"),
+      max(col("w")).as("__w"))
+      .select(
+        (signum(col("__s")).cast("long") *
+          expr("(abs(__s) * 1000000) div (4 * __w * __w)")).as("q_ppm"))
+    perC.crossJoin(broadcast(qDf))
+      .select(col("label"), col("n_nodes"), col("w_in"), col("s_tot"),
+        col("contrib_num"), col("w"), col("q_ppm"))
+  }
+
+  /** EXACT per-community conductance — the local counterpart of
+    * [[modularity]]'s global score: for community c,
+    *
+    *   φ(c) = cut(c) / min(vol(c), vol(V) − vol(c))
+    *
+    * with cut(c) the number of undirected edges with exactly one end in
+    * c and vol the degree sum (vol(V) = 2m). Low φ = a well-separated
+    * community; the screening metric for "is this cluster real or an
+    * artifact of the assignment". Exact integers end-to-end:
+    * `cond_ppm = (cut·10⁶) div min(d_tot, 2m − d_tot)`, with the
+    * whole-graph community (denominator 0, cut 0) defined as 0. Same
+    * partition contract, loud guards, isolated-node-drop asymmetry
+    * (an edge-less assignment row has volume 0 and cut 0 — dropping it
+    * cannot move any community's φ), and persist/materialize discipline
+    * as [[modularity]]. Returns `(label, n_nodes, cut, d_tot, cond_ppm)`.
+    *
+    * Runs [[conductanceWeighted]]'s body at unit weight on the
+    * deduplicated edge list.
+    */
+  def conductance(edges: DataFrame, srcCol: String, dstCol: String,
+                  assign: DataFrame, nodeCol: String,
+                  labelCol: String): DataFrame = {
+    scoreCommunities(unitCanonical(edges, srcCol, dstCol), assign, nodeCol,
+        labelCol, "conductance")(conductanceTable)
+      .toDF("label", "n_nodes", "cut", "d_tot", "cond_ppm")
+  }
+
+  /** WEIGHTED per-community conductance — [[conductance]] with every
+    * count an integer weight sum, completing the weighted community
+    * suite (weighted LPA assigns, Q_w scores globally, THIS scores
+    * locally): φ_w(c) = cut_w(c) / min(vol_w(c), 2W − vol_w(c)) in
+    * exact integer ppm, with cut_w the summed weight of boundary edges,
+    * vol_w the summed strength of members, W the total edge weight. A
+    * community tied to the outside by one heavy edge is exactly as
+    * leaky as one tied by many light ones — the multiplicity the
+    * unweighted score discards. Edge conventions are
+    * [[modularityWeighted]]'s: positive integer weights (loud
+    * otherwise), undirected, parallel rows sum across orientations;
+    * [[conductance]] is this score at unit weight. Returns `(label,
+    * n_nodes, cut_w, vol_w, cond_ppm)`.
+    */
+  def conductanceWeighted(edges: DataFrame, srcCol: String, dstCol: String,
+                          weightCol: String, assign: DataFrame,
+                          nodeCol: String, labelCol: String): DataFrame = {
+    val a = weightedEdges(edges, srcCol, dstCol, weightCol,
+      "conductanceWeighted: weights must be positive integers")
+    scoreCommunities(canonical(a), assign, nodeCol, labelCol,
+      "conductanceWeighted")(conductanceTable)
+  }
+
+  /** [[conductanceWeighted]]'s table from [[scoreCommunities]]' parts. */
+  private def conductanceTable(und: DataFrame, lbl: DataFrame,
+                               sC: DataFrame): DataFrame = {
+    // a boundary edge (lu != lv) contributes its WEIGHT to both cuts
+    val tagged = und
+      .join(lbl.select(col("node").as("u"), col("lbl").as("lu")), "u")
+      .join(lbl.select(col("node").as("v"), col("lbl").as("lv")), "v")
+      .filter(col("lu") =!= col("lv"))
+    val cuts = tagged.select(col("lu").as("lbl"), col("w"))
+      .unionByName(tagged.select(col("lv").as("lbl"), col("w")))
+      .groupBy(col("lbl")).agg(sum(col("w")).as("cut_w"))
+    val mDf = und.agg((sum(col("w")) * 2L).as("vol_all"))
+    sC.join(cuts, Seq("lbl"), "left")
+      .crossJoin(broadcast(mDf))
+      .withColumn("cut_w", coalesce(col("cut_w"), lit(0L)))
+      .select(col("lbl").as("label"), col("n_nodes"), col("cut_w"),
+        col("s_tot").as("vol_w"),
+        expr("""CASE WHEN least(s_tot, vol_all - s_tot) = 0 THEN CAST(0 AS BIGINT)
+                ELSE (cut_w * 1000000) div least(s_tot, vol_all - s_tot)
+                END""").as("cond_ppm"))
   }
 
   /** Multi-source BFS hop distances over an undirected graph: for every
@@ -1521,81 +1214,20 @@ object Graph {
     * src once.
     *
     * Overflow budget (BIGINT): `85·scale·maxW < 2⁶³` — weights up to
-    * ~10⁸ at the default 10⁹ scale. Weights must be positive (a zero
-    * total out-weight would divide by zero; enforced).
-    *
-    * Scale shape: identical to [[pageRankFixed]] — one edge-join + one
-    * dst-aggregate per iteration, shuffle ∝ edges.
+    * ~10⁸ at the default 10⁹ scale. Every input weight must be
+    * positive and non-null, checked row by row before the parallel sum
+    * (a zero total out-weight would divide by zero, and a null weight's
+    * mass would vanish). Runs [[pageRankFixed]]'s loop.
     */
   def weightedPageRank(edges: DataFrame, srcCol: String, dstCol: String,
                        wCol: String, iters: Int = 10,
                        scale: Long = 1000000000L): DataFrame = {
     require(iters >= 1, "iters must be positive")
-    val e = edges
-      .select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst"), col(wCol).cast("long").as("w"))
-      .groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w"))
-      .repartition(col("src")).persist()
-    try {
-      require(e.filter(col("w") <= 0L).isEmpty,
-        "weighted PageRank needs positive edge weights")
-      val nodes = e.select(col("src").as("node"))
-        .union(e.select(col("dst").as("node"))).distinct().persist()
-      try {
-        val dangling = nodes
-          .join(e.select(col("src").as("node")).distinct(), Seq("node"), "left_anti")
-          .persist()
-        try {
-          val nDangling = dangling.count()
-          val n = nodes.count()
-          val init = scale / n
-          val base = ((15L * scale) / 100L) / n
-          // total out-weight folded into the persisted edges once — see
-          // pageRankFixedConverged's ed
-          val ed = e
-            .join(e.groupBy(col("src")).agg(sum(col("w")).as("wd")), "src")
-            .persist()
-          try {
-            // see pageRankFixedConverged: one edge-sized cache, not two
-            ed.count()
-            e.unpersist(false)
-            var rank = nodes.select(col("node"), lit(init).as("r"))
-            for (_ <- 1 to iters) {
-              // base term folded into the contribution aggregate via the
-              // node-list union — see pageRankFixedConverged
-              val contribs = ed
-                .join(vecSide(rank.withColumnRenamed("node", "src"), n), "src")
-                .select(col("dst").as("node"),
-                  expr("(85 * r * w) div (100 * wd)").as("c"))
-              // dangling share folded into the round's checkpoint job as a
-              // broadcast 1-row aggregate (one action per iteration instead
-              // of two — see pageRankFixedConverged). dsh makes `rank` a
-              // lazy reader of `next`: it must be fully consumed by the
-              // eager localCheckpoint(true) before GenStore.freeLocal(rank).
-              val next =
-                if (nDangling == 0)
-                  contribs
-                    .unionByName(nodes.select(col("node"), lit(base).as("c")))
-                    .groupBy(col("node")).agg(sum(col("c")).as("r"))
-                else {
-                  val dsh = rank.join(dangling, Seq("node"), "left_semi")
-                    .agg(coalesce(sum(expr(s"(85 * r) div ${100L * n}")), lit(0L))
-                      .as("__dsh"))
-                  contribs
-                    .unionByName(nodes.crossJoin(broadcast(dsh))
-                      .select(col("node"), (lit(base) + col("__dsh")).as("c")))
-                    .groupBy(col("node")).agg(sum(col("c")).as("r"))
-                }
-              // one lineage cut per round — see pageRankFixedConverged
-              val materialized = next.localCheckpoint(true)
-              GenStore.freeLocal(rank)
-              rank = materialized
-            }
-            rank
-          } finally ed.unpersist(false)
-        } finally dangling.unpersist(false)
-      } finally nodes.unpersist(false)
-    } finally e.unpersist(false)
+    val e = weightedEdges(edges, srcCol, dstCol, wCol,
+        "weighted PageRank needs positive edge weights", dropLoops = false)
+      .groupBy(col("u").as("src"), col("v").as("dst")).agg(sum(col("w")).as("w"))
+    rankLoop(e, sum(col("w")).as("wd"), "(85 * r * w) div (100 * wd)", None,
+      iters, scale, -1L)._1
   }
 
   /** Single/multi-source WEIGHTED shortest paths (distributed
@@ -1617,6 +1249,7 @@ object Graph {
     * Everything is exact BIGINT arithmetic (distance = sum of integer
     * weights, min fold), so the fixpoint is engine-exact bit for bit.
     * Unreached nodes are absent; sources emit their 0 row by definition.
+    * A null or negative weight fails loudly; zero is a legal weight.
     * `localCheckpoint` cuts lineage each round; the per-round driver
     * action is the emptiness probe (the [[kCore]] cost class).
     */
@@ -1624,10 +1257,8 @@ object Graph {
                    wCol: String, sources: DataFrame, sourceCol: String,
                    maxRounds: Int = 64): DataFrame = {
     require(maxRounds >= 1, s"maxRounds must be positive, got $maxRounds")
-    val adj = edges
-      .select(col(srcCol).cast("long").as("u"), col(dstCol).cast("long").as("v"),
-        col(wCol).cast("long").as("w"))
-      .filter(col("u") =!= col("v"))
+    val adj = weightedEdges(edges, srcCol, dstCol, wCol,
+      "weightedHops: weights must be non-negative integers", minW = 0L)
     val und = adj
       .unionByName(adj.select(col("v").as("u"), col("u").as("v"), col("w")))
       .groupBy(col("u"), col("v")).agg(min(col("w")).as("w"))

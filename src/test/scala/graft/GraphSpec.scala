@@ -291,6 +291,39 @@ class GraphSpec extends SparkSpec {
     assert(err.getMessage.contains("did not converge"))
   }
 
+  test("weightedPageRank rejects a null or non-positive weight before summing") {
+    // the guard reads every input row: a null weight would drop out of the
+    // parallel sum with its edge's mass, and a negative row can hide
+    // inside a positive sum
+    val nullW = Seq((1L, 2L, Some(3L)), (2L, 1L, None), (2L, 3L, Some(1L)),
+      (3L, 1L, Some(1L))).toDF("src", "dst", "w")
+    val hidden = Seq((1L, 2L, -1L), (1L, 2L, 3L), (2L, 1L, 1L)).toDF("src", "dst", "w")
+    for (edges <- Seq(nullW, hidden)) {
+      val err = intercept[IllegalArgumentException] {
+        Graph.weightedPageRank(edges, "src", "dst", "w", iters = 2)
+      }
+      assert(err.getMessage.contains("positive"))
+    }
+  }
+
+  test("weightedHops rejects a null or negative weight; zero stays legal") {
+    // a null weight would surface as a null dist row, and a negative one
+    // would relax forever until the round cap reported non-convergence
+    val seeds = Seq(1L).toDF("node")
+    for (bad <- Seq(Seq((1L, 2L, Some(4L)), (2L, 3L, None)),
+        Seq((1L, 2L, Some(4L)), (2L, 3L, Some(-1L))))) {
+      val err = intercept[IllegalArgumentException] {
+        Graph.weightedHops(bad.toDF("src", "dst", "w"), "src", "dst", "w",
+          seeds, "node").count()
+      }
+      assert(err.getMessage.contains("non-negative"), err.getMessage)
+    }
+    val zero = Graph.weightedHops(Seq((1L, 2L, 0L), (2L, 3L, 5L))
+        .toDF("src", "dst", "w"), "src", "dst", "w", seeds, "node")
+      .as[(Long, Long)].collect().toMap
+    assert(zero == Map(1L -> 0L, 2L -> 0L, 3L -> 5L), s"got $zero")
+  }
+
   test("iteration loops never free a CALLER's upstream checkpoint") {
     // regression: the loops' checkpoint free used to collect every LogicalRDD in
     // the plan, so round 1 (init rank still derived from the input) freed
@@ -645,6 +678,46 @@ class GraphSpec extends SparkSpec {
       .select($"q_ppm").distinct().as[Long].collect().head
     assert(qw(got.toSeq.toDF("node", "label")) >= qw(assign),
       "the weighted sweep must not lower Q_w on this fixture")
+  }
+
+  test("jobs per call: the graph wing's PageRank and community operators, " +
+      "with and without dangling nodes") {
+    // two bridged triangles; every node has an out-edge unless `dangling`
+    // adds 7 and 8, which have none
+    val base = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L),
+      (5L, 6L), (6L, 4L), (5L, 1L))
+    def graph(dangling: Boolean) = {
+      val pairs = if (dangling) base ++ Seq((6L, 7L), (2L, 8L)) else base
+      (pairs.toDF("s", "d"),
+        pairs.map(p => (p._1, p._2, (p._1 + p._2) % 3 + 1)).toDF("s", "d", "w"))
+    }
+    def jobs(f: => org.apache.spark.sql.DataFrame): Int = jobsDuring(f.collect())._2
+    // dangling mass is PageRank's concern: its loops run on both graphs
+    def ranks(dangling: Boolean): Seq[Int] = {
+      val (e, ew) = graph(dangling)
+      Seq(jobs(Graph.pageRankFixed(e, "s", "d", iters = 2)),
+        jobs(Graph.pageRankFixedConverged(e, "s", "d", iters = 2, epsilon = 0L)._1),
+        jobs(Graph.personalizedPageRank(e, "s", "d", Seq(1L, 4L).toDF("node"),
+          "node", iters = 2)),
+        jobs(Graph.weightedPageRank(ew, "s", "d", "w", iters = 2)))
+    }
+    val (e, ew) = graph(dangling = true)
+    val assign = (1L to 8L).map(n => (n, if (n <= 3L) 1L else 4L)).toDF("node", "label")
+    val communities = Seq(
+      jobs(Graph.labelPropagation(e, "s", "d", rounds = 1)),
+      jobs(Graph.labelPropagationWeighted(ew, "s", "d", "w", rounds = 1)),
+      jobs(Graph.refineCommunities(e, "s", "d", assign, "node", "label")),
+      jobs(Graph.refineCommunitiesWeighted(ew, "s", "d", "w", assign, "node", "label")),
+      jobs(Graph.modularity(e, "s", "d", assign, "node", "label")),
+      jobs(Graph.modularityWeighted(ew, "s", "d", "w", assign, "node", "label")),
+      jobs(Graph.conductance(e, "s", "d", assign, "node", "label")),
+      jobs(Graph.conductanceWeighted(ew, "s", "d", "w", assign, "node", "label")))
+    val got = (ranks(dangling = false), ranks(dangling = true), communities)
+    // each unweighted community operator runs its weighted twin's body,
+    // so each pair reads alike
+    val expected = (Seq(23, 29, 31, 23), Seq(29, 35, 38, 29),
+      Seq(10, 10, 44, 44, 28, 28, 19, 19))
+    assert(got == expected, s"Spark jobs per call changed: $got")
   }
 
   test("hits: edge-less input fails loudly, not silently empty") {

@@ -548,37 +548,24 @@ class RuntimeFilterSpec extends SparkSpec {
       query().queryExecution.optimizedPlan // first plan: pays the job
       assert(RuntimeFilterJoin.harvestRuns.get() == 1,
         s"first plan must harvest once, ran ${RuntimeFilterJoin.harvestRuns.get()}")
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobs.incrementAndGet(); ()
-        }
-      }
       // build the frame BEFORE the window: spark.read.parquet runs
       // schema-inference jobs that are not the planner's to answer for
       val q2 = query()
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        val injected = q2.queryExecution.optimizedPlan.exists {
+      val (injected, replanJobs) = jobsDuring {
+        q2.queryExecution.optimizedPlan.exists {
           case f: Filter => f.condition.exists {
             case In(a: AttributeReference, _) => a.name == "k"
             case _ => false
           }
           case _ => false
         }
-        assert(injected, "the repeated plan must still get the filter")
-        spark.sparkContext.parallelize(Seq(1), 1).count() // marker job
-        val deadline = System.currentTimeMillis + 20000
-        while (jobs.get() < 1 && System.currentTimeMillis < deadline)
-          Thread.sleep(20)
-        assert(RuntimeFilterJoin.harvestRuns.get() == 1,
-          s"the re-plan must hit the memo, ran " +
-            s"${RuntimeFilterJoin.harvestRuns.get()} harvests")
-        assert(jobs.get() == 1,
-          s"a memoized harvest must re-plan with zero jobs beyond the " +
-            s"marker, saw ${jobs.get() - 1}")
-      } finally spark.sparkContext.removeSparkListener(listener)
+      }
+      assert(injected, "the repeated plan must still get the filter")
+      assert(RuntimeFilterJoin.harvestRuns.get() == 1,
+        s"the re-plan must hit the memo, ran " +
+          s"${RuntimeFilterJoin.harvestRuns.get()} harvests")
+      assert(replanJobs == 0,
+        s"a memoized harvest must re-plan with zero jobs, saw $replanJobs")
     }
   }
 }

@@ -616,30 +616,12 @@ class ZoneMapSpec extends SparkSpec {
     assert(m2.exists(_.files.size == 10))
     // cache identity: the second load is the same instance, no re-read
     assert(operators.ZoneMapMeta.load(spark, s"$dir/zone").get eq m2.get)
-    // ZERO Spark jobs for the pruning decision (the marker job proves
-    // the listener bus drained past our window)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
+    // ZERO Spark jobs for the pruning decision
     val preds = Seq(("a", 3L, 6L), ("b", 10L, 20L))
-    val (survivors, total) =
-      try {
-        val r = operators.ZoneMap.pruneFiles(spark, s"$dir/zone", preds)
-        // marker: an RDD count is EXACTLY one job (no AQE sub-jobs)
-        spark.sparkContext.parallelize(Seq(1), 1).count()
-        val deadline = System.currentTimeMillis + 20000
-        while (jobs.get() < 1 && System.currentTimeMillis < deadline)
-          Thread.sleep(20)
-        assert(jobs.get() == 1,
-          s"pruneFiles with a valid manifest must run zero Spark jobs " +
-            s"beyond the marker, saw ${jobs.get() - 1}")
-        r
-      } finally spark.sparkContext.removeSparkListener(listener)
+    val ((survivors, total), pruneJobs) =
+      jobsDuring(operators.ZoneMap.pruneFiles(spark, s"$dir/zone", preds))
+    assert(pruneJobs == 0,
+      s"pruneFiles with a valid manifest must run zero Spark jobs, saw $pruneJobs")
     assert(total == 10L && survivors.nonEmpty && survivors.size < 10)
     // the decisive pin: corrupt the zone TABLE's parquet bytes IN PLACE
     // (same name, same length — the manifest signature still validates).
@@ -961,28 +943,11 @@ class ZoneMapSpec extends SparkSpec {
       // (3) a bound on the NULLABLE column: full coverage serves the
       // per-file NON-NULL count (nulls fail the predicate) — zero scan,
       // zero jobs (the marker-job listener pin)
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobs.incrementAndGet(); ()
-        }
-      }
       val q2 = spark.read.parquet(s"$dir/data").filter(col("k") >= 0L)
         .agg(count(lit(1)).as("n"))
-      spark.sparkContext.addSparkListener(listener)
-      val n2 =
-        try {
-          val r = q2.collect().head.getLong(0)
-          spark.sparkContext.parallelize(Seq(1), 1).count() // marker
-          val deadline = System.currentTimeMillis + 20000
-          while (jobs.get() < 1 && System.currentTimeMillis < deadline)
-            Thread.sleep(20)
-          assert(jobs.get() == 1,
-            s"a pure-metadata count must run zero Spark jobs beyond " +
-              s"the marker, saw ${jobs.get() - 1}")
-          r
-        } finally spark.sparkContext.removeSparkListener(listener)
+      val (n2, countJobs) = jobsDuring(q2.collect().head.getLong(0))
+      assert(countJobs == 0,
+        s"a pure-metadata count must run zero Spark jobs, saw $countJobs")
       assert(n2 == 768L, s"count must be the non-null count, got $n2")
       // (4) multi-column coverage with NULLS in one column: under the
       // survivor-subset law the null-free column is non-filtering and
@@ -1188,24 +1153,10 @@ class ZoneMapSpec extends SparkSpec {
       // (3) a file-aligned range leaves NO boundary: zero Spark jobs
       // beyond the marker (the listener pin)
       val q2 = agg2(spark.read.parquet(s"$dir/data"))
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobs.incrementAndGet(); ()
-        }
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        assert(q2.collect().head == d2)
-        spark.sparkContext.parallelize(Seq(1), 1).count() // marker
-        val deadline = System.currentTimeMillis + 20000
-        while (jobs.get() < 1 && System.currentTimeMillis < deadline)
-          Thread.sleep(20)
-        assert(jobs.get() == 1,
-          s"a no-boundary sum/avg must run zero Spark jobs beyond the " +
-            s"marker, saw ${jobs.get() - 1}")
-      } finally spark.sparkContext.removeSparkListener(listener)
+      val (row2, sumJobs) = jobsDuring(q2.collect().head)
+      assert(row2 == d2)
+      assert(sumJobs == 0,
+        s"a no-boundary sum/avg must run zero Spark jobs, saw $sumJobs")
       // (4) the float refusal: a DOUBLE column's sum is addition-order-
       // dependent — no manifest slot, no rewrite, result stays exact
       val q3 = agg3(spark.read.parquet(s"$dir/data"))
