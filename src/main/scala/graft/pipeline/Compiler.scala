@@ -11,8 +11,8 @@ import graft.semantic.{ModelClient, SemanticOps}
   * deterministic; the semantic ops are opaque mapPartitions islands with
   * declared output schemas on both sides.
   *
-  * Dead-lettered rows from every semantic map are collected into one
-  * channel (K5) returned alongside the result.
+  * Dead-lettered rows from every semantic map and judge filter are
+  * collected into one channel (K5) returned alongside the result.
   */
 object Compiler {
   case class Compiled(result: DataFrame, deadLetter: Option[DataFrame])
@@ -41,7 +41,9 @@ object Compiler {
       case f: FilterOp =>
         df = df.filter(expr(f.predicate))
       case j: JudgeFilterOp =>
-        df = SemanticOps.semanticFilter(df, j.criteria, client)
+        val r = SemanticOps.semanticFilter(df, j.criteria, client)
+        addDead(r.dead)
+        df = r.ok
     }
     Compiled(df, dead)
   }

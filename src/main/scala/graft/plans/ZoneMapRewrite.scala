@@ -145,17 +145,15 @@ case class ZoneMapPrune(spark: SparkSession) extends Rule[LogicalPlan] {
     // explicitly (pruneTyped's described/typed requires) degrades HERE
     // to "no rewrite" — the unpruned scan is always correct, and the
     // warning keeps the refusal observable instead of silent.
-    // COUNT aggregates rewrite top-DOWN first (the Aggregate must be
+    // metadata AGGREGATES rewrite top-DOWN first (the Aggregate must be
     // seen while its child Filter is still the raw scan shape — after
     // the bottom-up file-prune pass the child is already rewritten and
     // the strictly-better metadata answer would be lost); whatever the
-    // count arm leaves alone still gets file pruning below.
+    // aggregate arm leaves alone still gets file pruning below.
     val counted = plan.transformDown {
       case agg @ Aggregate(gs, outs, child, _) =>
-        try {
-          (if (gs.isEmpty) countFromMeta(outs, child)
-          else groupedCountFromMeta(gs, outs, child)).getOrElse(agg)
-        } catch {
+        try aggFromMeta(gs, outs, child).getOrElse(agg)
+        catch {
           case scala.util.control.NonFatal(e) =>
             log.warn(s"zone-map metadata aggregate skipped (rewrite must " +
               s"not fail the query): ${e.getMessage}")
@@ -174,26 +172,10 @@ case class ZoneMapPrune(spark: SparkSession) extends Rule[LogicalPlan] {
     }
   }
 
-  /** The rewritten Filter (residual kept, scan pruned), or None when the
-    * shape, freshness, or skipping potential says leave it alone.
-    * Candidate resolution iterates ALL path-matching registrations and
-    * takes the first FRESH one (the [[JoinViewRewrite]] house gotcha:
-    * a rebuilt zone map registered without clearing must not let the
-    * stale registration pin a refusal forever). The manifest is loaded
-    * ONCE per candidate (memoized below — it answers freshness, bloom
-    * discovery, and every survivor evaluation); when it validates the
-    * whole decision is driver-side metadata, ZERO zone-table scans per
-    * planned query, and the survivor set composes the envelope with
-    * per-disjunct and per-IN-literal UNION refinements
-    * ([[survivorSet]]). The zone TABLE is the authoritative fallback
-    * for pre-manifest maps — envelope-only there (the refinements need
-    * the cached per-file stats; a table scan per disjunct would be
-    * plan-time jobs, the very cost the manifest removed).
-    */
   /** The first FRESH path-matching registration for `rel`, its
     * (possibly absent) validated manifest, and the relation's landed
     * files — the shared entry-resolution for the filter-prune and
-    * metadata-count arms. ONE manifest load per candidate path (each a
+    * metadata-aggregate arms. ONE manifest load per candidate path (each a
     * cache hit after the first query): freshness, bloom columns, and
     * pruning all read it. Freshness = every landed file is DESCRIBED
     * (an undescribed file would be silently skipped), answered from the
@@ -239,6 +221,22 @@ case class ZoneMapPrune(spark: SparkSession) extends Rule[LogicalPlan] {
     }
   }
 
+  /** The rewritten Filter (residual kept, scan pruned), or None when the
+    * shape, freshness, or skipping potential says leave it alone.
+    * Candidate resolution iterates ALL path-matching registrations and
+    * takes the first FRESH one (the [[JoinViewRewrite]] house gotcha:
+    * a rebuilt zone map registered without clearing must not let the
+    * stale registration pin a refusal forever). The manifest is loaded
+    * ONCE per candidate (memoized below — it answers freshness, bloom
+    * discovery, and every survivor evaluation); when it validates the
+    * whole decision is driver-side metadata, ZERO zone-table scans per
+    * planned query, and the survivor set composes the envelope with
+    * per-disjunct and per-IN-literal UNION refinements
+    * ([[survivorSet]]). The zone TABLE is the authoritative fallback
+    * for pre-manifest maps — envelope-only there (the refinements need
+    * the cached per-file stats; a table scan per disjunct would be
+    * plan-time jobs, the very cost the manifest removed).
+    */
   private def prune(cond: Expression,
                     rel: LogicalRelation): Option[LogicalPlan] = {
     val (entry, meta, _) = freshEntry(rel).getOrElse(return None)
@@ -270,100 +268,8 @@ case class ZoneMapPrune(spark: SparkSession) extends Rule[LogicalPlan] {
     }
   }
 
-  /** `count(*)` / `min` / `max` / `sum` / `avg` ANSWERED FROM METADATA
-    * — the Iceberg/Delta aggregate-from-manifest optimization over the
-    * engine's own zone map: an ungrouped aggregate whose outputs are
-    * counts, min/max, and integral sums/averages over stat columns,
-    * and whose filter is a pure conjunction of single-column
-    * range/equality bounds on stat columns, partitions the described
-    * files three ways against the v5 manifest's `min:max:cnt:sum`
-    * slots —
-    *  - DISJOINT files (span outside some bound, or all-null in a
-    *    bounded column) contribute ZERO rows, provably;
-    *  - FULLY-COVERED files (every bounded column's span inside its
-    *    bound) contribute from METADATA: the bounded column's NON-NULL
-    *    count when one column is bounded (nulls fail the predicate,
-    *    everything else passes), the file's row count when several are
-    *    and none has nulls (`cnt == n` for each — with nulls the
-    *    per-column counts cannot compose, so the file boundary-scans);
-    *  - BOUNDARY files scan, with the original filter intact.
-    * The rewrite is the sum: a `LocalRelation` ONE-ROW answer when no
-    * boundary remains (zero Spark jobs, zero data read — the year-range
-    * count over a date-clustered 100 TB corpus in a metadata lookup),
-    * else `metaCount + count(boundary scan)`. CONSERVATIVE gates, every
-    * one sound-by-refusal: every output must be a non-distinct
-    * unfiltered `count(<non-null lit>)` or a `min`/`max` over a BARE
-    * stat-column attribute whose original type reconstructs losslessly
-    * from the stat unit (a fully-covered file's min(c) is its manifest
-    * `min_c` — min/max ignore c's own nulls, and any OTHER bounded
-    * column with nulls shrinks the survivor set unpredictably, so such
-    * files boundary-scan; boundary legs merge via `Least`/`Greatest`,
-    * whose null-skipping is exactly the empty-leg semantics); EVERY
-    * filter conjunct must be
-    * a recognized bound (one opaque conjunct and a covered file can no
-    * longer be proven all-match) — strict string comparisons refuse
-    * (their envelope widening would claim false coverage; integer
-    * strict bounds are exact via ±1), `IsNotNull(statCol)` is accepted
-    * as the full-range bound (its matching rows ARE the non-null
-    * count), and `IsNull(statCol)` is accepted as the COMPLEMENT
-    * conjunct — a file's matching rows w.r.t. it are its `n − cnt`
-    * null rows (cnt == n is provably disjoint), so `count(*) WHERE c
-    * IS NULL` is a pure manifest read; the general count law is
-    * per-conjunct survivor subsets composing only when at most ONE is
-    * proper (two proper subsets' intersection is unknowable from
-    * counts — boundary-scan); a min/max/sum column that is ITSELF
-    * under IS NULL contributes nothing (its survivors are all null in
-    * it), and any OTHER active IS NULL column forces mm/sum files to
-    * scan unless it is all-null; files with UNKNOWN counts (carried
-    * from pre-v4 zone tables) boundary-scan, never guess; described
-    * files are intersected with the relation's landed files so a stale
-    * extra in the manifest can never over-count.
-    *
-    * SUM and AVG ride the same three-way partition on the v5 sum slot:
-    * a fully-covered file's `sum(c)` is its manifest `sum_c` under the
-    * SAME other-columns-null-free condition as min/max (sum's own
-    * nulls are excluded on both sides), accumulated exactly
-    * (`addExact` — a long overflow aborts the rewrite, degrading to
-    * the unrewritten aggregate whose own overflow behavior then
-    * applies untouched); files with unknown sums (pre-v5 carries,
-    * build-time `try_sum` overflow, non-summable types — float/double
-    * NEVER have a sum slot, their addition is order-dependent)
-    * boundary-scan. Boundary legs merge by `coalesce(partial, 0) +
-    * metaSum` guarded by the zero-values witness (sum over no values
-    * is NULL, not 0), and AVG decomposes into its exact (sum, count)
-    * pair — merged as one division, explicitly null-guarded so ANSI
-    * sessions never divide by zero. `try_sum`/`try_avg` refuse (their
-    * overflow-to-null cannot merge with a plain Add).
-    */
-  /** The aggregate-arm child shapes: a bare scan, optionally under a
-    * Filter and/or a plain-attribute Project (any alias would hide an
-    * expression the stats know nothing about). */
-  private def aggShape(child: LogicalPlan)
-      : Option[(Option[Expression], LogicalRelation)] = {
-    def plainAttrs(pl: Seq[NamedExpression]): Boolean =
-      pl.forall(_.isInstanceOf[AttributeReference])
-    child match {
-      case rel: LogicalRelation => Some((None, rel))
-      case Project(pl, rel: LogicalRelation) if plainAttrs(pl) =>
-        Some((None, rel))
-      case Filter(c, rel: LogicalRelation) => Some((Some(c), rel))
-      case Project(pl, Filter(c, rel: LogicalRelation))
-          if plainAttrs(pl) => Some((Some(c), rel))
-      case Filter(c, Project(pl, rel: LogicalRelation))
-          if plainAttrs(pl) => Some((Some(c), rel))
-      case _ => None
-    }
-  }
-
-  /** The metadata-aggregate arms' shared conjunct gate: EVERY filter
-    * conjunct must be a recognized bound (range/equality on a stat
-    * column, `IsNotNull` as the full-range bound, `IsNull` as the
-    * complement conjunct) AND every recognized bound must have
-    * MATERIALIZED in the harvest ([[Harvested.dropped]]) — one opaque
-    * or dropped conjunct and a covered file can no longer be proven
-    * all-match. None = refuse the whole metadata answer.
-    */
-  /** `inSets` carries each long-image column's IN-conjunct literal
+  /** The bounds [[aggGate]] accepted, per stat column. `inSets`
+    * carries each long-image column's IN-conjunct literal
     * sets (sorted, stat unit, intersected when a column has several):
     * the per-file refinement a span test cannot make — a single-valued
     * file whose value is NOT a member is provably disjoint even when
@@ -376,6 +282,14 @@ case class ZoneMapPrune(spark: SparkSession) extends Rule[LogicalPlan] {
       notNullCols: Set[String], isNullCols: Set[String],
       inSets: Map[String, Array[Long]] = Map.empty)
 
+  /** The metadata-aggregate arm's conjunct gate: EVERY filter
+    * conjunct must be a recognized bound (range/equality on a stat
+    * column, `IsNotNull` as the full-range bound, `IsNull` as the
+    * complement conjunct) AND every recognized bound must have
+    * MATERIALIZED in the harvest ([[Harvested.dropped]]) — one opaque
+    * or dropped conjunct and a covered file can no longer be proven
+    * all-match. None = refuse the whole metadata answer.
+    */
   private def aggGate(condOpt: Option[Expression], rel: LogicalRelation,
                       ex: Extract, statCols: Seq[String]): Option[AggGate] = {
     val conjs = condOpt.map(conjunctsOf).getOrElse(Seq.empty)
@@ -523,8 +437,8 @@ case class ZoneMapPrune(spark: SparkSession) extends Rule[LogicalPlan] {
     * integrals/date/timestamp, the unscaled long for ver ≥ 6 decimals
     * (min/max of unscaled values at one fixed scale ARE the unscaled
     * min/max; a pre-v6 manifest's decimal image is lossy and refuses),
-    * the raw string for string stat columns. ONE law shared by the
-    * ungrouped and grouped arms so the two cannot drift. */
+    * the raw string for string stat columns. ONE law for min/max
+    * outputs and group keys alike. */
   private def mmColFor(ex: Extract, meta: ZoneMapMeta.Meta,
                        a: AttributeReference): Option[String] =
     a.dataType match {
@@ -562,10 +476,9 @@ case class ZoneMapPrune(spark: SparkSession) extends Rule[LogicalPlan] {
       case _ => None
     }
 
-  /** The PER-FILE answerability law shared by the ungrouped and
-    * grouped metadata-aggregate arms — ONE implementation so the two
-    * cannot drift (the r18 gate/harvest-drift lesson applied to this
-    * code itself):
+  /** The PER-FILE answerability law of the metadata-aggregate arm —
+    * ONE implementation for every output and every grouping (the r18
+    * gate/harvest-drift lesson applied to this code itself):
     *  - [[covs]]: per bounded column 0 = provably disjoint, 2 = fully
     *    covered, 1 = partial (all-null columns are 0 for range bounds
     *    — no row passes a range or IsNotNull on them); IS NULL columns
@@ -701,338 +614,33 @@ case class ZoneMapPrune(spark: SparkSession) extends Rule[LogicalPlan] {
       }
   }
 
-  private def countFromMeta(outs: Seq[NamedExpression],
-                            child: LogicalPlan): Option[LogicalPlan] = {
-    // every output is a non-distinct, unfiltered count(<non-null lit>)
-    // or a min/max over a BARE column attribute (validated as a stat
-    // column of a reconstructible type below)
-    sealed trait MOut
-    case object CntOut extends MOut
-    case class MinOut(a: AttributeReference) extends MOut
-    case class MaxOut(a: AttributeReference) extends MOut
-    // sum/avg carry the query's own eval MODE (ANSI throw vs legacy
-    // null-on-overflow) so the merge legs reproduce exactly the
-    // overflow behavior the direct aggregate would have had
-    case class SumOut(a: AttributeReference, em: EvalMode.Value) extends MOut
-    case class AvgOut(a: AttributeReference, em: EvalMode.Value) extends MOut
-    val parsedOuts: Seq[Option[(Alias, MOut)]] = outs.map {
-      case al @ Alias(AggregateExpression(
-        Count(Seq(Literal(v, _))), _, false, None, _), _) if v != null =>
-        Some((al, CntOut))
-      case al @ Alias(AggregateExpression(
-        org.apache.spark.sql.catalyst.expressions.aggregate
-          .Min(a: AttributeReference), _, false, None, _), _) =>
-        Some((al, MinOut(a)))
-      case al @ Alias(AggregateExpression(
-        org.apache.spark.sql.catalyst.expressions.aggregate
-          .Max(a: AttributeReference), _, false, None, _), _) =>
-        Some((al, MaxOut(a)))
-      // TRY-mode sum/avg refuse: try_sum turns overflow into null while
-      // the merge's Add follows plain session semantics — the shapes
-      // would disagree exactly where it matters
-      case al @ Alias(AggregateExpression(
-        Sum(a: AttributeReference, ctx), _, false, None, _), _)
-          if ctx.evalMode != EvalMode.TRY =>
-        Some((al, SumOut(a, ctx.evalMode)))
-      case al @ Alias(AggregateExpression(
-        Average(a: AttributeReference, em), _, false, None, _), _)
-          if em != EvalMode.TRY =>
-        Some((al, AvgOut(a, em)))
-      case _ => None
-    }
-    if (outs.isEmpty || parsedOuts.exists(_.isEmpty)) return None
-    val mOuts = parsedOuts.flatten
-    val (condOpt, rel) = aggShape(child).getOrElse(return None)
-    val (entry, metaOpt, relFiles) = freshEntry(rel).getOrElse(return None)
-    val meta = metaOpt.getOrElse(return None) // counts live in the manifest
-    val relSet = relFiles.map(PathNorm.norm).toSet
-    val files = meta.files.filter(f => relSet.contains(PathNorm.norm(f.file)))
-    val ex = new Extract(rel, entry.statCols, utcSession)
-    def mmCol(a: AttributeReference): Option[String] = mmColFor(ex, meta, a)
-    def sumColOf(a: AttributeReference): Option[String] =
-      sumColFor(ex, meta, a)
-    val mmOk = mOuts.forall {
-      case (_, MinOut(a)) => mmCol(a).isDefined
-      case (_, MaxOut(a)) => mmCol(a).isDefined
-      case (_, SumOut(a, _)) => sumColOf(a).isDefined
-      case (_, AvgOut(a, _)) => sumColOf(a).isDefined
-      case _ => true
-    }
-    if (!mmOk) return None
-    val gate = aggGate(condOpt, rel, ex, entry.statCols)
-      .getOrElse(return None)
-    val law = new FileLaw(gate, meta)
-    val isNullCols = law.isNullCols
-    val cmp = graft.operators.ZoneMapMeta.cmpUtf8 _
-    var metaCount = 0L
-    val metaMinL = scala.collection.mutable.Map.empty[String, Long]
-    val metaMaxL = scala.collection.mutable.Map.empty[String, Long]
-    val metaMinS = scala.collection.mutable.Map.empty[String, String]
-    val metaMaxS = scala.collection.mutable.Map.empty[String, String]
-    // per sum/avg column: the exact covered-side sum (addExact — a
-    // partial that overflows long aborts the whole rewrite via the
-    // NonFatal catch in apply, degrading to the unrewritten aggregate)
-    // and the covered-side NON-NULL count it spans (the avg divisor,
-    // and the null witness: zero contributing values means the sum leg
-    // is NULL, not 0)
-    val metaSumL = scala.collection.mutable.Map.empty[String, Long]
-    val metaSumCnt = scala.collection.mutable.Map.empty[String, Long]
-    val boundary = Seq.newBuilder[String]
-    var nBoundary = 0
-    files.foreach { f =>
-      val covs = law.covs(f)
-      if (covs.contains(0)) () // provably zero matching rows
-      else if (covs.forall(_ == 2)) {
-        // every output must be answerable from this file's stats, or
-        // the whole file boundary-scans (a split contribution would
-        // double-count it) — the answerability law itself lives in
-        // [[FileLaw]], shared with the grouped arm
-        //
-        // a column asked for by BOTH sum and avg must accumulate once
-        // per file — the closures below guard on this per-file set
-        val sumTouched = scala.collection.mutable.Set.empty[String]
-        def sumAnswer(a: AttributeReference): Option[() => Unit] = {
-          val c = sumColOf(a).get
-          law.sumPair(f, c).map { case (sm, ct) => () =>
-            if (sumTouched.add(c)) {
-              sm.foreach(v =>
-                metaSumL(c) = Math.addExact(metaSumL.getOrElse(c, 0L), v))
-              metaSumCnt(c) = metaSumCnt.getOrElse(c, 0L) + ct
-            }
-          }
-        }
-        val answers: Seq[Option[() => Unit]] = mOuts.map {
-          case (_, CntOut) =>
-            law.cntAnswer(f).map(ct => () => metaCount += ct)
-          case (_, SumOut(a, _)) => sumAnswer(a)
-          case (_, AvgOut(a, _)) => sumAnswer(a)
-          case (_, MinOut(a)) =>
-            val c = mmCol(a).get
-            if (isNullCols.contains(c)) Some(() => ()) // all-null survivors
-            else if (!law.mmAnswerable(f, c)) None
-            else if (meta.strCols.contains(c))
-              f.sstats.getOrElse(c, None) match {
-                case Some((mn, _)) => Some(() => metaMinS(c) =
-                  metaMinS.get(c).filter(x => cmp(x, mn) <= 0).getOrElse(mn))
-                case None => Some(() => ()) // all-null: no contribution
-              }
-            else f.stats.getOrElse(c, None) match {
-              case Some((mn, _)) => Some(() => metaMinL(c) =
-                math.min(metaMinL.getOrElse(c, Long.MaxValue), mn))
-              case None => Some(() => ())
-            }
-          case (_, MaxOut(a)) =>
-            val c = mmCol(a).get
-            if (isNullCols.contains(c)) Some(() => ()) // all-null survivors
-            else if (!law.mmAnswerable(f, c)) None
-            else if (meta.strCols.contains(c))
-              f.sstats.getOrElse(c, None) match {
-                case Some((_, mx)) => Some(() => metaMaxS(c) =
-                  metaMaxS.get(c).filter(x => cmp(x, mx) >= 0).getOrElse(mx))
-                case None => Some(() => ())
-              }
-            else f.stats.getOrElse(c, None) match {
-              case Some((_, mx)) => Some(() => metaMaxL(c) =
-                math.max(metaMaxL.getOrElse(c, Long.MinValue), mx))
-              case None => Some(() => ())
-            }
-        }
-        if (answers.forall(_.isDefined)) answers.foreach(_.get.apply())
-        else { boundary += f.file; nBoundary += 1 }
-      } else { boundary += f.file; nBoundary += 1 }
-    }
-    def metaValue(o: MOut): Option[(Any,
-        org.apache.spark.sql.types.DataType)] = o match {
-      case CntOut => Some((metaCount, LongType))
-      case MinOut(a) =>
-        val c = mmCol(a).get
-        if (meta.strCols.contains(c)) metaMinS.get(c).map(s =>
-          (org.apache.spark.unsafe.types.UTF8String.fromString(s),
-            a.dataType))
-        else metaMinL.get(c).map(v => (internalOf(v, a.dataType), a.dataType))
-      case MaxOut(a) =>
-        val c = mmCol(a).get
-        if (meta.strCols.contains(c)) metaMaxS.get(c).map(s =>
-          (org.apache.spark.unsafe.types.UTF8String.fromString(s),
-            a.dataType))
-        else metaMaxL.get(c).map(v => (internalOf(v, a.dataType), a.dataType))
-      // None when ZERO covered values contributed: sum/avg over no
-      // values is NULL, never 0 — absent meta values emit exactly that
-      case SumOut(a, _) =>
-        val c = sumColOf(a).get
-        if (metaSumCnt.getOrElse(c, 0L) > 0L) a.dataType match {
-          case d: DecimalType =>
-            // Sum(decimal(p,s)) yields Decimal(p+10, s): reconstruct it
-            // from the exact unscaled sum at the column's own scale
-            val rt = sumDecType(d)
-            Some((decOf(metaSumL(c), d.scale, rt), rt))
-          case _ => Some((metaSumL(c), LongType))
-        }
-        else None
-      // the served average is the EXACT integer sum over the count —
-      // bit-identical to Spark's Average (which accumulates its sum in
-      // a double for integral inputs) whenever the exact sum is within
-      // double's 2^53 integer range, and the DETERMINISTIC value beyond
-      // it, where Spark's own double accumulation becomes partial-
-      // aggregation-order-dependent (run-to-run nondeterministic — an
-      // impossible and pointless target to replicate; serving the
-      // exact quotient is the same determinism argument as refusing
-      // float sums outright). DECIMAL averages evaluate Spark's OWN
-      // final-average expression ([[avgEval]]) over the exact
-      // (sum, count) literals on the driver — the precision-adjusted
-      // HALF_UP division included, by construction, zero Spark jobs
-      case AvgOut(a, em) =>
-        val c = sumColOf(a).get
-        val mc = metaSumCnt.getOrElse(c, 0L)
-        if (mc == 0L) None
-        else a.dataType match {
-          case d: DecimalType =>
-            val sumT = sumDecType(d)
-            val e = avgEval(a, em,
-              Literal(decOf(metaSumL(c), d.scale, sumT), sumT),
-              Literal(mc))
-            Some((e.eval(), e.dataType))
-          case _ =>
-            Some((metaSumL(c).toDouble / mc.toDouble, DoubleType))
-        }
-    }
-    val bFiles = boundary.result()
-    if (bFiles.isEmpty)
-      // a global aggregate over zero matching rows is ONE row with
-      // count 0 and null min/max — exactly what absent meta values emit
-      Some(LocalRelation(outs.map(_.toAttribute),
-        Seq(InternalRow.fromSeq(mOuts.map(o =>
-          metaValue(o._2).map(_._1).orNull)))))
-    else if (nBoundary >= files.size) None // nothing answered: no churn
-    else rebuild(rel, bFiles.sorted).map { scan =>
-      val inner = condOpt.map(Filter(_, scan)).getOrElse(scan)
-      // the boundary-scan aggregate's part list: one part per output,
-      // except AVG which decomposes into its (sum, count) pair — an
-      // Average part cannot merge with a metadata leg, but its exact
-      // pieces can (avg = (metaSum + partSum) / (metaCnt + partCnt))
-      val partsBuf =
-        scala.collection.mutable.ArrayBuffer.empty[NamedExpression]
-      def addPart(e: Expression): Attribute = {
-        val al = Alias(e, s"part_${partsBuf.size}")()
-        partsBuf += al
-        al.toAttribute
-      }
-      val projected = mOuts.map { case (al, o) =>
-        val merged: Expression = o match {
-          case CntOut => Add(addPart(al.child), Literal(metaCount))
-          case SumOut(a, em) =>
-            val part = addPart(al.child)
-            val c = sumColOf(a).get
-            if (metaSumCnt.getOrElse(c, 0L) == 0L)
-              part // no covered values: the boundary leg IS the sum
-            else a.dataType match {
-              case d: DecimalType =>
-                // the merge mirrors Sum's own merge+evaluate: decimal
-                // Add computes exactly (Decimal arithmetic is BigDecimal
-                // under the hood; the node's declared wider type never
-                // rounds the value) and CheckOverflow enforces the
-                // Sum(p+10, s) result type with the query's own mode —
-                // ANSI throws, legacy nulls — exactly where the direct
-                // aggregate's final CheckOverflowInSum would. (A
-                // boundary-SUBSET sum overflowing where the total does
-                // not — sign cancellation across legs — surfaces the
-                // mode's overflow behavior one merge early; Spark's own
-                // per-partition partials carry the same exposure shape,
-                // partition-boundary-dependently.)
-                val sumT = sumDecType(d)
-                CheckOverflow(
-                  Add(Coalesce(Seq(part, Literal(decOf(0L, d.scale, sumT),
-                    sumT))), Literal(decOf(metaSumL(c), d.scale, sumT),
-                    sumT)),
-                  sumT, nullOnOverflow = em == EvalMode.LEGACY)
-              case _ =>
-                // an empty boundary leg is NULL ("no values"), which
-                // must act as zero against a real metadata sum —
-                // coalesce, never bare Add (null + x = null would erase
-                // the sum)
-                Add(Coalesce(Seq(part, Literal(0L))), Literal(metaSumL(c)))
-            }
-          case AvgOut(a, em) =>
-            val c = sumColOf(a).get
-            a.dataType match {
-              case d: DecimalType =>
-                // DECIMAL averages merge exactly: the boundary leg is a
-                // native decimal Sum partial plus its non-null Count,
-                // the metadata leg the exact unscaled-sum literal, and
-                // the final division is Spark's OWN average expression
-                // over the merged (sum, count) pair ([[avgEval]] — no
-                // division twin to drift). Zero total values short-
-                // circuit to NULL before any division evaluates.
-                val sumT = sumDecType(d)
-                val sPart = addPart(Sum(a).toAggregateExpression())
-                val cPart = addPart(Count(a).toAggregateExpression())
-                val totC = Add(cPart, Literal(metaSumCnt.getOrElse(c, 0L)))
-                val totS = CheckOverflow(
-                  Add(Coalesce(Seq(sPart, Literal(decOf(0L, d.scale, sumT),
-                    sumT))),
-                    Literal(decOf(metaSumL.getOrElse(c, 0L), d.scale, sumT),
-                      sumT)),
-                  sumT, nullOnOverflow = em == EvalMode.LEGACY)
-                val rt = Average(a, em).dataType
-                If(EqualTo(totC, Literal(0L)), Literal(null, rt),
-                  avgEval(a, em, totS, totC))
-              case _ =>
-                // the boundary sum part accumulates in DOUBLE, exactly
-                // like Spark's own integral Average — a LongType Sum
-                // part would THROW under ANSI on a > 2^63 boundary
-                // total where the direct (unrewritten) average
-                // succeeds, and a rewrite must never fail a query that
-                // would succeed unrewritten; within double's 2^53
-                // integer range (every sum a double can hold
-                // losslessly) the double path is exact and bit-identical
-                val sPart = addPart(
-                  Sum(Cast(a, DoubleType)).toAggregateExpression())
-                val cPart = addPart(Count(a).toAggregateExpression())
-                val totS = Add(Coalesce(Seq(sPart, Literal(0.0d))),
-                  Literal(metaSumL.getOrElse(c, 0L).toDouble))
-                val totC = Add(cPart, Literal(metaSumCnt.getOrElse(c, 0L)))
-                // zero total values → NULL (Average's own empty
-                // semantics), guarded explicitly so ANSI sessions never
-                // divide by zero
-                If(EqualTo(totC, Literal(0L)), Literal(null, DoubleType),
-                  Divide(totS, Cast(totC, DoubleType)))
-            }
-          case mo => metaValue(mo) match {
-            // Least/Greatest skip nulls, so an empty boundary-scan leg
-            // (null) yields the metadata value and vice versa — the
-            // exact null semantics of the direct aggregate
-            case Some((v, dt)) =>
-              val part = addPart(al.child)
-              val lit = Literal(v, dt)
-              if (mo.isInstanceOf[MinOut])
-                org.apache.spark.sql.catalyst.expressions
-                  .Least(Seq(part, lit))
-              else org.apache.spark.sql.catalyst.expressions
-                .Greatest(Seq(part, lit))
-            case None => addPart(al.child)
-          }
-        }
-        Alias(merged, al.name)(exprId = al.exprId)
-      }
-      val aggNode = Aggregate(Nil, partsBuf.toSeq, inner)
-      Project(projected, aggNode)
-    }
-  }
-
-  /** GROUPED metadata aggregates over a CLUSTERED layout — the
-    * daily-dashboard shape generalized to the full warehouse rollup:
-    * `GROUP BY k1, …, kn` + count/sum/avg/min/max over a layout where
-    * files are SINGLE-VALUED in every group key (date-clustered,
-    * per-partition-written, or z-ordered narrow spans), so their
-    * per-group contributions answer from the manifest and only mixed
-    * files scan. TPC-H Q1 — `GROUP BY l_returnflag, l_linestatus` with
-    * sum/avg/count over a flag-clustered layout — is a manifest read.
-    * Same three-way law as the ungrouped arm, per file:
-    *  - DISJOINT w.r.t. the (gate-recognized) filter — contributes no
-    *    group, provably; an EMPTY file (n = 0) contributes nothing;
-    *  - COVERED + every key RESOLVED + every output answerable
-    *    (the shared [[FileLaw]]) — contributes its slots to the
-    *    driver-side group map;
+  /** `count(*)` / `min` / `max` / `sum` / `avg` ANSWERED FROM METADATA,
+    * with or without `GROUP BY` — the Iceberg/Delta aggregate-from-
+    * manifest optimization over the engine's own zone map. An UNGROUPED
+    * aggregate is the zero-key case: every answered file folds into the
+    * one group `()`. With keys the layout must be CLUSTERED — files
+    * SINGLE-VALUED in every group key (date-clustered,
+    * per-partition-written, or z-ordered narrow spans) answer their
+    * group's contribution from the manifest and only mixed files scan:
+    * TPC-H Q1 (`GROUP BY l_returnflag, l_linestatus` with sum/avg/count
+    * over a flag-clustered layout) is a manifest read, and so is the
+    * year-range count over a date-clustered 100 TB corpus.
+    *
+    * The described files — intersected with the relation's landed
+    * files, so a stale extra in the manifest can never over-count —
+    * partition three ways against the v5 manifest's `min:max:cnt:sum`
+    * slots, per file (the shared [[FileLaw]]):
+    *  - DISJOINT w.r.t. the gate-recognized filter (span outside some
+    *    bound, or all-null in a bounded column) — contributes ZERO
+    *    rows, provably; an EMPTY file (n = 0) contributes nothing;
+    *  - COVERED (every bounded column's span inside its bound) + every
+    *    key RESOLVED + every output answerable — contributes its slots
+    *    to the driver-side group map. A count is the bounded column's
+    *    NON-NULL count when one column is bounded (nulls fail the
+    *    predicate, everything else passes), the file's row count when
+    *    several are and none has nulls (`cnt == n` for each — with
+    *    nulls the per-column counts cannot compose, so the file
+    *    boundary-scans);
     *  - everything else BOUNDARY-scans with the filter intact.
     * A key RESOLVES per file three ways:
     *  - a BARE stat-column attribute ([[mmColFor]] law — a group VALUE
@@ -1064,35 +672,69 @@ case class ZoneMapPrune(spark: SparkSession) extends Rule[LogicalPlan] {
     * for integral inputs, exactly like Spark's own Average; DECIMAL
     * sums at Sum's (p+10, s) type with the final division evaluated
     * through Spark's OWN average expression, [[avgEval]]); min/max:
-    * the file's own stat under [[FileLaw.mmAnswerable]] — and the
-    * metadata rows and the boundary scan's partial aggregates share
-    * that slot layout, so the merge is ONE per-group aggregate per
-    * slot over their UNION (Sum for adds, Min/Max for extrema — a
-    * partial min of partial mins IS the min), folding to a zero-job
-    * `LocalRelation` of the group map when no boundary remains.
+    * the file's own stat under [[FileLaw.mmAnswerable]]. A column
+    * asked for by both sum and avg fills each output's own slots, so
+    * it is never counted twice. A covered file's `sum(c)` is its
+    * manifest `sum_c` under the SAME other-columns-null-free condition
+    * as min/max (sum's own nulls are excluded on both sides),
+    * accumulated exactly (`addExact` — a long overflow aborts the
+    * rewrite, degrading to the unrewritten aggregate whose own
+    * overflow behavior then applies untouched); files with unknown
+    * sums (pre-v5 carries, build-time `try_sum` overflow, non-summable
+    * types — float/double NEVER have a sum slot, their addition is
+    * order-dependent) boundary-scan.
+    *
+    * The rewrite, when no boundary remains, is a zero-job
+    * `LocalRelation` of the group map: SQL's one-row rule seeds the
+    * zero-key group, so a global aggregate over zero matching rows is
+    * ONE row (count 0, NULL sum/avg/min/max) while a grouped one is
+    * zero rows. Otherwise the boundary scan's partial aggregates merge
+    * with the metadata slots: keyed, over a UNION with the metadata
+    * rows (`unionMerge`); with zero keys, as literals in ONE aggregate
+    * over the boundary scan (`literalMerge`).
     * Driver cost: O(|files| · |outputs|) manifest folds and a group
     * map bounded by |served files| — the manifest's own magnitude, the
     * bounded driver artifact this subsystem already holds.
-    * CONSERVATIVE gates: outputs limited to group keys, non-distinct
-    * `count(<literal>)`s, non-TRY `sum`/`avg` over [[sumColFor]]
-    * columns, and `min`/`max` over [[mmColFor]] columns; the shared
-    * [[aggGate]] conjunct discipline. A non-stat key, a float sum, a
-    * non-whitelisted expression key — refuse, the unrewritten
-    * aggregate is always correct.
+    *
+    * CONSERVATIVE gates, every one sound-by-refusal: outputs limited to
+    * group keys, non-distinct unfiltered `count(<non-null literal>)`s,
+    * non-TRY `sum`/`avg` over [[sumColFor]] columns, and `min`/`max`
+    * over a BARE [[mmColFor]] column (a covered file's min(c) is its
+    * manifest `min_c` — min/max ignore c's own nulls, and any OTHER
+    * bounded column with nulls shrinks the survivor set unpredictably,
+    * so such files boundary-scan). EVERY filter conjunct must be a
+    * recognized bound ([[aggGate]] — one opaque conjunct and a covered
+    * file can no longer be proven all-match): strict string
+    * comparisons refuse (their envelope widening would claim false
+    * coverage; integer strict bounds are exact via ±1),
+    * `IsNotNull(statCol)` is accepted as the full-range bound (its
+    * matching rows ARE the non-null count), and `IsNull(statCol)` as
+    * the COMPLEMENT conjunct — a file's matching rows w.r.t. it are its
+    * `n − cnt` null rows (cnt == n is provably disjoint), so `count(*)
+    * WHERE c IS NULL` is a pure manifest read. The general count law is
+    * per-conjunct survivor subsets composing only when at most ONE is
+    * proper (two proper subsets' intersection is unknowable from
+    * counts — boundary-scan); a min/max/sum column that is ITSELF
+    * under IS NULL contributes nothing (its survivors are all null in
+    * it), and any OTHER active IS NULL column forces mm/sum files to
+    * scan unless it is all-null; files with UNKNOWN counts (carried
+    * from pre-v4 zone tables) boundary-scan, never guess. A non-stat
+    * key, a float sum, a non-whitelisted expression key — refuse, the
+    * unrewritten aggregate is always correct.
     */
-  private def groupedCountFromMeta(gs: Seq[Expression],
-                                   outs: Seq[NamedExpression],
-                                   child: LogicalPlan)
-      : Option[LogicalPlan] = {
-    // the grouped arm's child shapes: [[aggShape]]'s, plus the
-    // analyzer's own PullOutGroupingExpressions form — a Project
-    // carrying `<expr> AS _groupingexpression#N` aliases (every
-    // expression group key reaches the optimizer THIS way, the bare
-    // expression never does) — whose aliases substitute back into the
-    // grouping keys below; an alias referenced by anything the stats
-    // cannot answer (an aggregate over it, an unrecognized expression)
-    // refuses downstream through the same column-resolution gates
-    def groupedShape(c: LogicalPlan)
+  private def aggFromMeta(gs: Seq[Expression],
+                          outs: Seq[NamedExpression],
+                          child: LogicalPlan): Option[LogicalPlan] = {
+    // the child shapes: a bare scan, optionally under a Filter and/or a
+    // plain-attribute Project, plus the analyzer's own
+    // PullOutGroupingExpressions form — a Project carrying `<expr> AS
+    // _groupingexpression#N` aliases (every expression group key reaches
+    // the optimizer THIS way, the bare expression never does) — whose
+    // aliases substitute back into the grouping keys below; an alias
+    // referenced by anything the stats cannot answer (an aggregate over
+    // it, an unrecognized expression) refuses downstream through the
+    // same column-resolution gates
+    def shape(c: LogicalPlan)
         : Option[(Option[Expression], LogicalRelation,
           Map[Long, Expression])] = {
       def split(pl: Seq[NamedExpression]): Option[Map[Long, Expression]] =
@@ -1115,11 +757,64 @@ case class ZoneMapPrune(spark: SparkSession) extends Rule[LogicalPlan] {
         case _ => None
       }
     }
-    val (condOpt, rel, pulled) = groupedShape(child).getOrElse(return None)
+    val (condOpt, rel, pulled) = shape(child).getOrElse(return None)
     def unPull(e: Expression): Expression = e match {
       case a: AttributeReference => pulled.getOrElse(a.exprId.id, a)
       case other => other
     }
+    // ---- outputs ----
+    // parsed before any manifest is read: an output the stats cannot
+    // answer refuses without a freshness check
+    sealed trait GOut
+    case class GKeyOut(i: Int) extends GOut
+    case object GCnt extends GOut
+    // sum/avg carry the query's own eval MODE (ANSI throw vs legacy
+    // null-on-overflow) so the merge legs reproduce exactly the
+    // overflow behavior the direct aggregate would have had
+    case class GSum(a: AttributeReference, em: EvalMode.Value) extends GOut
+    case class GAvg(a: AttributeReference, em: EvalMode.Value) extends GOut
+    case class GMin(a: AttributeReference) extends GOut
+    case class GMax(a: AttributeReference) extends GOut
+    // an output IS key i when it equals the grouping expression as the
+    // Aggregate lists it or as substituted back
+    def keyIdx(ne: NamedExpression): Option[Int] = {
+      val e = ne match { case Alias(ch, _) => ch; case other => other }
+      gs.zipWithIndex.collectFirst {
+        case (g, i) if e.semanticEquals(g) ||
+          e.semanticEquals(unPull(g)) => i
+      }
+    }
+    val parsed: Seq[Option[(NamedExpression, GOut)]] = outs.map { ne =>
+      keyIdx(ne).map(i => (ne, GKeyOut(i): GOut)).orElse(ne match {
+        case al @ Alias(AggregateExpression(
+          Count(Seq(Literal(v, _))), _, false, None, _), _) if v != null =>
+          Some((al, GCnt))
+        // TRY-mode sum/avg refuse: try_sum turns overflow into null while
+        // the merge's Add follows plain session semantics — the shapes
+        // would disagree exactly where it matters
+        case al @ Alias(AggregateExpression(
+          Sum(a: AttributeReference, ctx), _, false, None, _), _)
+            if ctx.evalMode != EvalMode.TRY =>
+          Some((al, GSum(a, ctx.evalMode)))
+        case al @ Alias(AggregateExpression(
+          Average(a: AttributeReference, em), _, false, None, _), _)
+            if em != EvalMode.TRY =>
+          Some((al, GAvg(a, em)))
+        case al @ Alias(AggregateExpression(
+          org.apache.spark.sql.catalyst.expressions.aggregate
+            .Min(a: AttributeReference), _, false, None, _), _) =>
+          Some((al, GMin(a)))
+        case al @ Alias(AggregateExpression(
+          org.apache.spark.sql.catalyst.expressions.aggregate
+            .Max(a: AttributeReference), _, false, None, _), _) =>
+          Some((al, GMax(a)))
+        case _ => None
+      })
+    }
+    if (parsed.exists(_.isEmpty)) return None
+    val gOuts = parsed.flatten
+    if (!gOuts.exists(o => !o._2.isInstanceOf[GKeyOut])) return None
+
     val (entry, metaOpt, relFiles) = freshEntry(rel).getOrElse(return None)
     val meta = metaOpt.getOrElse(return None)
     val ex = new Extract(rel, entry.statCols, utcSession)
@@ -1237,50 +932,6 @@ case class ZoneMapPrune(spark: SparkSession) extends Rule[LogicalPlan] {
     if (keysOpt.exists(_.isEmpty)) return None
     val keys = keysOpt.flatten
 
-    // ---- outputs ----
-    sealed trait GOut
-    case class GKeyOut(i: Int) extends GOut
-    case object GCnt extends GOut
-    case class GSum(a: AttributeReference, em: EvalMode.Value) extends GOut
-    case class GAvg(a: AttributeReference, em: EvalMode.Value) extends GOut
-    case class GMin(a: AttributeReference) extends GOut
-    case class GMax(a: AttributeReference) extends GOut
-    def keyIdx(ne: NamedExpression): Option[Int] = {
-      val e = ne match { case Alias(ch, _) => ch; case other => other }
-      keys.zipWithIndex.collectFirst {
-        case (k, i) if e.semanticEquals(k.gOrig) ||
-          e.semanticEquals(k.g) => i
-      }
-    }
-    val parsed: Seq[Option[(NamedExpression, GOut)]] = outs.map { ne =>
-      keyIdx(ne).map(i => (ne, GKeyOut(i): GOut)).orElse(ne match {
-        case al @ Alias(AggregateExpression(
-          Count(Seq(Literal(v, _))), _, false, None, _), _) if v != null =>
-          Some((al, GCnt))
-        // grouped sum/avg ride the sum slots under the same TRY-mode
-        // refusal as the ungrouped arm
-        case al @ Alias(AggregateExpression(
-          Sum(a: AttributeReference, ctx), _, false, None, _), _)
-            if ctx.evalMode != EvalMode.TRY =>
-          Some((al, GSum(a, ctx.evalMode)))
-        case al @ Alias(AggregateExpression(
-          Average(a: AttributeReference, em), _, false, None, _), _)
-            if em != EvalMode.TRY =>
-          Some((al, GAvg(a, em)))
-        case al @ Alias(AggregateExpression(
-          org.apache.spark.sql.catalyst.expressions.aggregate
-            .Min(a: AttributeReference), _, false, None, _), _) =>
-          Some((al, GMin(a)))
-        case al @ Alias(AggregateExpression(
-          org.apache.spark.sql.catalyst.expressions.aggregate
-            .Max(a: AttributeReference), _, false, None, _), _) =>
-          Some((al, GMax(a)))
-        case _ => None
-      })
-    }
-    if (parsed.exists(_.isEmpty)) return None
-    val gOuts = parsed.flatten
-    if (!gOuts.exists(o => !o._2.isInstanceOf[GKeyOut])) return None
     def sumColOf(a: AttributeReference): Option[String] =
       sumColFor(ex, meta, a)
     def mmColOf(a: AttributeReference): Option[String] =
@@ -1378,6 +1029,12 @@ case class ZoneMapPrune(spark: SparkSession) extends Rule[LogicalPlan] {
     val metaGroups =
       scala.collection.mutable.LinkedHashMap
         .empty[Seq[Any], Array[Option[Any]]]
+    // SQL's one-row rule: a global aggregate over zero matching rows is
+    // ONE row — count 0, NULL sum/avg/min/max, exactly what empty slots
+    // emit — so the zero-key group exists before any file folds into it;
+    // a grouped aggregate over zero rows has no group and no row
+    if (keys.isEmpty)
+      metaGroups(Seq.empty) = Array.fill[Option[Any]](nSlots)(None)
     val boundary = Seq.newBuilder[String]
     var nBoundary = 0
     files.foreach { f =>
@@ -1454,42 +1111,131 @@ case class ZoneMapPrune(spark: SparkSession) extends Rule[LogicalPlan] {
         v.map(s => org.apache.spark.unsafe.types.UTF8String
           .fromString(s.asInstanceOf[String])).orNull
       else v.map(l => internalOf(l.asInstanceOf[Long], a.dataType)).orNull
-    val bFiles = boundary.result()
-    if (bFiles.isEmpty)
-      // the whole grouped aggregate is a metadata read: one
-      // LocalRelation row per group, zero Spark jobs when nothing scans
-      Some(LocalRelation(outs.map(_.toAttribute),
-        metaGroups.toSeq.map { case (gvs, acc) =>
-          var ai = 0
-          InternalRow.fromSeq(gOuts.map {
-            case (_, GKeyOut(i)) => keyInternal(gvs(i))
-            case (_, o) =>
-              val off = slotOffs(ai); ai += 1
-              o match {
-                case GAvg(a, em) =>
-                  val cnt =
-                    acc(off + 1).map(_.asInstanceOf[Long]).getOrElse(0L)
-                  if (cnt == 0L) null
-                  else a.dataType match {
-                    case d: DecimalType =>
-                      // Spark's OWN average expression over the exact
-                      // (sum, count) pair, evaluated on the driver
-                      val sumT = sumDecType(d)
-                      avgEval(a, em,
-                        Literal(decOf(acc(off).get.asInstanceOf[Long],
-                          d.scale, sumT), sumT),
-                        Literal(cnt)).eval()
-                    case _ => acc(off)
-                      .map(u => Double
-                        .box(u.asInstanceOf[Long].toDouble / cnt.toDouble))
-                      .orNull
-                  }
-                case other => slotValues(other, acc, off).head
-              }
-          })
-        }))
-    else if (nBoundary >= files.size) None // nothing answered: no churn
-    else rebuild(rel, bFiles.sorted).map { scan =>
+    /** The ZERO-key boundary merge keeps the global-aggregate plan: ONE
+      * Aggregate over the boundary scan, the metadata row's values
+      * merged in as literals — count `part + n`; sum
+      * `coalesce(part, 0) + s`, guarded by the zero-values witness (sum
+      * over no values is NULL, not 0); avg as one division over the
+      * merged exact (sum, count) pair; min/max via `Least`/`Greatest`.
+      * Routing it through
+      * the Union of `unionMerge` would put an Aggregate(Nil) over a
+      * Union — an Exchange SinglePartition and one more Spark job per
+      * query — for a metadata leg of at most one row. */
+    def literalMerge(scan: LogicalPlan): LogicalPlan = {
+      val acc = metaGroups(Seq.empty)
+      def metaL(off: Int): Long =
+        acc(off).map(_.asInstanceOf[Long]).getOrElse(0L)
+      val inner = condOpt.map(Filter(_, scan)).getOrElse(scan)
+      // the boundary-scan aggregate's part list: one part per output,
+      // except AVG which decomposes into its (sum, count) pair — an
+      // Average part cannot merge with a metadata leg, but its exact
+      // pieces can (avg = (metaSum + partSum) / (metaCnt + partCnt))
+      val partsBuf =
+        scala.collection.mutable.ArrayBuffer.empty[NamedExpression]
+      def addPart(e: Expression): Attribute = {
+        val al = Alias(e, s"part_${partsBuf.size}")()
+        partsBuf += al
+        al.toAttribute
+      }
+      val projected = aggOuts.zip(slotOffs).map { case ((ne, o), off) =>
+        val al = ne.asInstanceOf[Alias] // aggregates parse as aliases only
+        val merged: Expression = o match {
+          case GCnt => Add(addPart(al.child), Literal(metaL(off)))
+          case GSum(a, em) =>
+            val part = addPart(al.child)
+            if (acc(off).isEmpty)
+              part // no covered values: the boundary leg IS the sum
+            else a.dataType match {
+              case d: DecimalType =>
+                // the merge mirrors Sum's own merge+evaluate: decimal
+                // Add computes exactly (Decimal arithmetic is BigDecimal
+                // under the hood; the node's declared wider type never
+                // rounds the value) and CheckOverflow enforces the
+                // Sum(p+10, s) result type with the query's own mode —
+                // ANSI throws, legacy nulls — exactly where the direct
+                // aggregate's final CheckOverflowInSum would. (A
+                // boundary-SUBSET sum overflowing where the total does
+                // not — sign cancellation across legs — surfaces the
+                // mode's overflow behavior one merge early; Spark's own
+                // per-partition partials carry the same exposure shape,
+                // partition-boundary-dependently.)
+                val sumT = sumDecType(d)
+                CheckOverflow(
+                  Add(Coalesce(Seq(part, Literal(decOf(0L, d.scale, sumT),
+                    sumT))), Literal(decOf(metaL(off), d.scale, sumT), sumT)),
+                  sumT, nullOnOverflow = em == EvalMode.LEGACY)
+              case _ =>
+                // an empty boundary leg is NULL ("no values"), which
+                // must act as zero against a real metadata sum —
+                // coalesce, never bare Add (null + x = null would erase
+                // the sum)
+                Add(Coalesce(Seq(part, Literal(0L))), Literal(metaL(off)))
+            }
+          case GAvg(a, em) =>
+            a.dataType match {
+              case d: DecimalType =>
+                // DECIMAL averages merge exactly: the boundary leg is a
+                // native decimal Sum partial plus its non-null Count,
+                // the metadata leg the exact unscaled-sum literal, and
+                // the final division is Spark's OWN average expression
+                // over the merged (sum, count) pair ([[avgEval]] — no
+                // division twin to drift). Zero total values short-
+                // circuit to NULL before any division evaluates.
+                val sumT = sumDecType(d)
+                val sPart = addPart(Sum(a).toAggregateExpression())
+                val cPart = addPart(Count(a).toAggregateExpression())
+                val totC = Add(cPart, Literal(metaL(off + 1)))
+                val totS = CheckOverflow(
+                  Add(Coalesce(Seq(sPart, Literal(decOf(0L, d.scale, sumT),
+                    sumT))), Literal(decOf(metaL(off), d.scale, sumT), sumT)),
+                  sumT, nullOnOverflow = em == EvalMode.LEGACY)
+                val rt = Average(a, em).dataType
+                If(EqualTo(totC, Literal(0L)), Literal(null, rt),
+                  avgEval(a, em, totS, totC))
+              case _ =>
+                // the boundary sum part accumulates in DOUBLE, exactly
+                // like Spark's own integral Average — a LongType Sum
+                // part would THROW under ANSI on a > 2^63 boundary
+                // total where the direct (unrewritten) average
+                // succeeds, and a rewrite must never fail a query that
+                // would succeed unrewritten; within double's 2^53
+                // integer range (every sum a double can hold
+                // losslessly) the double path is exact and bit-identical
+                val sPart = addPart(
+                  Sum(Cast(a, DoubleType)).toAggregateExpression())
+                val cPart = addPart(Count(a).toAggregateExpression())
+                val totC = Add(cPart, Literal(metaL(off + 1)))
+                val totS = Add(Coalesce(Seq(sPart, Literal(0.0d))),
+                  Literal(metaL(off).toDouble))
+                // zero total values → NULL (Average's own empty
+                // semantics), guarded explicitly so ANSI sessions never
+                // divide by zero
+                If(EqualTo(totC, Literal(0L)), Literal(null, DoubleType),
+                  Divide(totS, Cast(totC, DoubleType)))
+            }
+          case mm =>
+            // Least/Greatest skip nulls, so an empty boundary-scan leg
+            // (null) yields the metadata value and vice versa — the
+            // exact null semantics of the direct aggregate
+            val part = addPart(al.child)
+            slotValues(mm, acc, off).head match {
+              case null => part
+              case v =>
+                val lit = Literal(v, al.child.dataType)
+                if (mm.isInstanceOf[GMin])
+                  org.apache.spark.sql.catalyst.expressions
+                    .Least(Seq(part, lit))
+                else org.apache.spark.sql.catalyst.expressions
+                  .Greatest(Seq(part, lit))
+            }
+        }
+        Alias(merged, al.name)(exprId = al.exprId)
+      }
+      Project(projected, Aggregate(Nil, partsBuf.toSeq, inner))
+    }
+    /** The KEYED boundary merge: scan partials ∪ metadata rows, one
+      * per-group aggregate per slot. */
+    def unionMerge(scan: LogicalPlan): LogicalPlan = {
       // the scan leg keeps the ORIGINAL child plan (its filter, and
       // the analyzer's pulled-grouping Project when present) with only
       // the relation swapped for its survivor projection — exprIds are
@@ -1631,6 +1377,55 @@ case class ZoneMapPrune(spark: SparkSession) extends Rule[LogicalPlan] {
       }
       Aggregate(gUs, finalOuts, u)
     }
+    val bFiles = boundary.result()
+    if (bFiles.isEmpty)
+      // the whole aggregate is a metadata read: one LocalRelation row
+      // per group, zero Spark jobs when nothing scans
+      Some(LocalRelation(outs.map(_.toAttribute),
+        metaGroups.toSeq.map { case (gvs, acc) =>
+          var ai = 0
+          InternalRow.fromSeq(gOuts.map {
+            case (_, GKeyOut(i)) => keyInternal(gvs(i))
+            case (_, o) =>
+              val off = slotOffs(ai); ai += 1
+              o match {
+                // the served average is the EXACT integer sum over the
+                // count — bit-identical to Spark's Average (which
+                // accumulates its sum in a double for integral inputs)
+                // whenever the exact sum is within double's 2^53 integer
+                // range, and the DETERMINISTIC value beyond it, where
+                // Spark's own double accumulation becomes partial-
+                // aggregation-order-dependent (run-to-run
+                // nondeterministic — an impossible and pointless target
+                // to replicate; serving the exact quotient is the same
+                // determinism argument as refusing float sums outright)
+                case GAvg(a, em) =>
+                  val cnt =
+                    acc(off + 1).map(_.asInstanceOf[Long]).getOrElse(0L)
+                  if (cnt == 0L) null
+                  else a.dataType match {
+                    case d: DecimalType =>
+                      // Spark's OWN average expression over the exact
+                      // (sum, count) pair, evaluated on the driver — the
+                      // precision-adjusted HALF_UP division included, by
+                      // construction, zero Spark jobs
+                      val sumT = sumDecType(d)
+                      avgEval(a, em,
+                        Literal(decOf(acc(off).get.asInstanceOf[Long],
+                          d.scale, sumT), sumT),
+                        Literal(cnt)).eval()
+                    case _ => acc(off)
+                      .map(u => Double
+                        .box(u.asInstanceOf[Long].toDouble / cnt.toDouble))
+                      .orNull
+                  }
+                case other => slotValues(other, acc, off).head
+              }
+          })
+        }))
+    else if (nBoundary >= files.size) None // nothing answered: no churn
+    else rebuild(rel, bFiles.sorted).map(scan =>
+      if (keys.isEmpty) literalMerge(scan) else unionMerge(scan))
   }
 
   /** The survivor FILE set for `e` over the cached manifest — pure

@@ -82,7 +82,7 @@ object SemanticQueries {
       (s, dir) => {
         SemanticOps.semanticFilter(
             t(s, dir, "documents").select(col("doc_id"), col("text")),
-            "Is this document high quality? {{ input.text }}", client)
+            "Is this document high quality? {{ input.text }}", client).ok
           .select(col("doc_id"))
           .orderBy(col("doc_id"))
       },

@@ -165,15 +165,17 @@ object SemanticOps extends Serializable {
   }
 
   /** Semantic (LLM-judge) filter (P6): boolean verdict + rationale per row;
-    * keeps rows the judge passes. Judge output is schema-constrained like
-    * any other semantic map.
+    * `ok` keeps the input rows the judge passes. Judge output is
+    * schema-constrained like any other semantic map: a verdict that does
+    * not parse (null `passed`) is retried, then dead-lettered — never
+    * dropped as if the judge had said no.
     */
   def semanticFilter(df: DataFrame, criteria: String, client: ModelClient,
-                     batchSize: Int = 16): DataFrame = {
+                     batchSize: Int = 16): SemanticResult = {
     val schema = StructType(Seq(
       StructField("passed", BooleanType), StructField("rationale", StringType)))
-    val res = semanticMap(df, criteria, schema, client, validations = Nil,
-      retries = 0, batchSize = batchSize)
-    res.ok.filter(col("passed")).drop("passed", "rationale")
+    val res = semanticMap(df, criteria, schema, client,
+      validations = Seq("passed IS NOT NULL"), batchSize = batchSize)
+    res.copy(ok = res.ok.filter(col("passed")).drop("passed", "rationale"))
   }
 }

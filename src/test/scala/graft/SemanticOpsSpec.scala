@@ -176,9 +176,38 @@ class SemanticOpsSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
   }
 
   test("judge filter keeps a deterministic subset") {
-    val kept = SemanticOps.semanticFilter(docs, "Good? {{ input.text }}", client)
-    assert(kept.count() < 3 || kept.count() > 0)
+    val criteria = "Is this document high quality? {{ input.text }}"
+    def keptIds(kept: org.apache.spark.sql.DataFrame): Seq[Long] =
+      kept.select("doc_id").as[Long].collect().sorted.toSeq
+    val kept = SemanticOps.semanticFilter(docs, criteria, client).ok
     assert(kept.columns.toSet == Set("doc_id", "text"))
+    val ids = keptIds(kept)
+    assert(keptIds(SemanticOps.semanticFilter(docs, criteria, client).ok) == ids,
+      "two runs must keep the same rows")
+    // the stub's own verdict on each row's first-attempt prompt
+    val ddl = StructType(Seq(StructField("passed", BooleanType),
+      StructField("rationale", StringType))).toDDL
+    val passing = docs.as[(Long, String)].collect().toSeq.collect {
+      case (id, text) if client.complete(
+          s"Is this document high quality? $text\n#attempt=0", ddl)
+          .contains("\"passed\": true") => id
+    }.sorted
+    assert(passing.nonEmpty && passing.size < docs.count(),
+      s"the fixture must draw both verdicts, got passing=$passing")
+    assert(ids == passing, s"kept $ids, but the judge passed $passing")
+  }
+
+  test("a judge filter's unparseable verdict reaches the pipeline dead letter") {
+    // malformed JSON leaves `passed` null: the row is neither a "yes"
+    // nor a "no", so it must not vanish from both the result and the
+    // dead letter
+    val spec = PipelineSpec("judge",
+      Seq(JudgeFilterOp("judge", "Good? {{ input.text }}")))
+    val out = Compiler.run(docs, spec, new MalformedFor("gamma"))
+    val dead = out.deadLetter.map(_.collect().toSeq).getOrElse(Seq.empty)
+    assert(dead.size == 1 && dead.head.getString(0).contains("gamma"),
+      s"the malformed verdict's row must be dead-lettered, got $dead")
+    assert(!out.result.select("doc_id").as[Long].collect().contains(1L))
   }
 
   test("Aggregator-based semantic reduce equals mapPartitions semanticReduce") {

@@ -937,9 +937,14 @@ class ZoneMapSpec extends SparkSpec {
       // metadata, boundary files 0 and 3 scan — and ONLY they open
       val q1 = spark.read.parquet(s"$dir/data")
         .filter(col("a").between(10L, 120L)).agg(count(lit(1)).as("n"))
-      assert(q1.collect().head.getLong(0) == 111L * 4)
+      val (n1, q1Jobs) = jobsDuring(q1.collect().head.getLong(0))
+      assert(n1 == 111L * 4)
       assert(q1.inputFiles.length == 2,
         s"only the two boundary files may open (${q1.inputFiles.length})")
+      // the ungrouped boundary merge is ONE aggregate over the boundary
+      // scan, no Union leg and no extra exchange: its job count is pinned
+      assert(q1Jobs == 3,
+        s"an ungrouped boundary merge ran $q1Jobs Spark jobs")
       // (3) a bound on the NULLABLE column: full coverage serves the
       // per-file NON-NULL count (nulls fail the predicate) — zero scan,
       // zero jobs (the marker-job listener pin)
@@ -1157,6 +1162,23 @@ class ZoneMapSpec extends SparkSpec {
       assert(row2 == d2)
       assert(sumJobs == 0,
         s"a no-boundary sum/avg must run zero Spark jobs, saw $sumJobs")
+      // (3b) every file provably disjoint: SQL's one-row rule — a
+      // global aggregate over zero rows is ONE row, count 0 and NULL
+      // sum/avg/min — folded to metadata, zero Spark jobs
+      val qNone = spark.read.parquet(s"$dir/data")
+        .filter(col("a") > 1000L)
+        .agg(count(lit(1)).as("n"), sum(col("a")).as("sa"),
+          avg(col("a")).as("va"), min(col("a")).as("mna"))
+      qNone.queryExecution.optimizedPlan match {
+        case lr: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+          assert(lr.data.length == 1,
+            s"an all-disjoint global aggregate is one row, got ${lr.data.length}")
+        case other => fail(s"an all-disjoint filter must fold to metadata:\n$other")
+      }
+      val (rowNone, noneJobs) = jobsDuring(qNone.collect().toSeq)
+      assert(rowNone == Seq(org.apache.spark.sql.Row(0L, null, null, null)),
+        s"zero matching rows must read (0, null, null, null), got $rowNone")
+      assert(noneJobs == 0, s"an all-disjoint fold ran $noneJobs Spark jobs")
       // (4) the float refusal: a DOUBLE column's sum is addition-order-
       // dependent — no manifest slot, no rewrite, result stays exact
       val q3 = agg3(spark.read.parquet(s"$dir/data"))
@@ -1461,10 +1483,15 @@ class ZoneMapSpec extends SparkSpec {
       // rows land in the null group through the scan leg, exactly as
       // the direct aggregate; its sums merge by per-group addition)
       val q1 = grouped(q)
-      assert(q1.collect().map(_.toSeq).toSet == dAll,
+      val (rows1, q1Jobs) = jobsDuring(q1.collect())
+      assert(rows1.map(_.toSeq).toSet == dAll,
         "merged grouped count/sum/avg must equal the direct aggregate")
       assert(q1.inputFiles.length == 1,
         s"only the mixed file may open (${q1.inputFiles.length})")
+      // the grouped boundary merge (scan partials ∪ metadata rows, one
+      // per-group aggregate) has its job count pinned
+      assert(q1Jobs == 4,
+        s"a grouped boundary merge ran $q1Jobs Spark jobs")
       // (2) a bound excluding the mixed file: every surviving file is
       // single-valued and covered — the whole grouped aggregate folds
       // to a LocalRelation, sums and averages included
@@ -1474,6 +1501,16 @@ class ZoneMapSpec extends SparkSpec {
           .LocalRelation],
         "an all-covered grouped aggregate must fold to metadata")
       assert(q2.collect().map(_.toSeq).toSet == dCov)
+      // (2b) every file provably disjoint: a GROUPED aggregate over zero
+      // rows is zero rows (no group exists), folded to metadata
+      val qNone = grouped(q.filter(col("a") > 1000L))
+      qNone.queryExecution.optimizedPlan match {
+        case lr: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+          assert(lr.data.isEmpty,
+            s"an all-disjoint grouped aggregate has no rows, got ${lr.data}")
+        case other => fail(s"an all-disjoint filter must fold to metadata:\n$other")
+      }
+      assert(qNone.collect().isEmpty)
       // (3) refusal: a grouped sum over a NON-stat column — the
       // manifest has no slot for it; unrewritten, exact
       val q3 = q.groupBy(col("grp")).agg(sum(col("w")).as("sw"))
