@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{TextFns, VectorFns}
@@ -363,6 +363,26 @@ object Dedup {
     }
   }
 
+  /** Driver-side union-find over an edge list: every node that touches an
+    * edge, mapped to the lowest id of its component.
+    */
+  private def unionFind(edges: Iterable[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
+      var c = x
+      while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
+      r
+    }
+    edges.foreach { case (a, b) =>
+      parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) { val (lo, hi) = if (ra < rb) (ra, rb) else (rb, ra); parent(hi) = lo }
+    }
+    parent.keys.map(k => k -> find(k)).toMap
+  }
+
   /** Connected components over a pair graph by iterative min-label
     * propagation PLUS pointer jumping (each round every node adopts the
     * smallest label in its neighborhood, then compresses one level:
@@ -398,23 +418,10 @@ object Dedup {
           org.apache.spark.sql.types.StructField("label", org.apache.spark.sql.types.LongType))))
     }
     if (nEdges <= smallGraphThreshold) {
-      val es = edges.collect().map(r => (r.getLong(0), r.getLong(1)))
-      val parent = scala.collection.mutable.Map.empty[Long, Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-        var c = x
-        while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      es.foreach { case (a, b) =>
-        parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) { val (lo, hi) = if (ra < rb) (ra, rb) else (rb, ra); parent(hi) = lo }
-      }
       val spark = pairs.sparkSession
       import spark.implicits._
-      return parent.keys.toSeq.map(k => (k, find(k))).toDF("id", "label")
+      return unionFind(edges.collect().map(r => (r.getLong(0), r.getLong(1))))
+        .toSeq.toDF("id", "label")
     }
     var labels = edges.select(col("src").as("id")).distinct()
       .withColumn("label", col("id"))
@@ -849,18 +856,75 @@ object Dedup {
                            path: String, gen: Long): Unit =
     GenStore.rollback(spark, path, gen)
 
+  /** Largest plan-estimated input (`optimizedPlan.stats.sizeInBytes`)
+    * that [[dedupCorpus]] dedups on the driver: 4 MiB. The driver holds
+    * roughly 20 bytes per byte of text (each word recurs in three 3-word
+    * shingles, and each shingle is a JVM string plus a hash-set entry), so
+    * the bound implies about 80 MiB of driver heap for an uncompressed
+    * estimate, and about 250 MiB when the estimate is compressed parquet
+    * (about a third of the text).
+    */
+  private val LocalDedupMaxBytes: Long = 4L * 1024 * 1024
+
+  /** [[pairsFromSigned]] on the driver over collected `(__id, __sh, __bk)`
+    * rows: bucket by (band, key), drop buckets over `maxBucket`, expand
+    * the distinct pairs, verify Jaccard over the shingle sets and keep
+    * those at or above `threshold`. The Jaccard rounds as Spark's
+    * `round(x, 4)` does (HALF_UP on the double's decimal form), so the
+    * pairs are the distributed path's.
+    */
+  private def localPairs(signed: Array[Row], threshold: Double,
+                         maxBucket: Int): Iterable[(Long, Long)] = {
+    val shingles = signed.map(r => r.getLong(0) -> r.getSeq[String](1).toSet).toMap
+    val buckets = signed.toSeq.flatMap { r =>
+      r.getSeq[Row](2).map { bk =>
+        // a portable band key is an md5 binary: bucket by its bytes, not
+        // by the array's identity
+        val key = bk.get(1) match {
+          case b: Array[Byte] => b.toSeq
+          case k => k
+        }
+        (bk.getInt(0), key) -> r.getLong(0)
+      }
+    }.groupMap(_._1)(_._2).values
+    val cand = buckets.iterator.filter(ids => ids.size >= 2 && ids.size <= maxBucket)
+      .flatMap(ids => ids.sorted.combinations(2).map(p => (p(0), p(1))))
+      .toSet
+    cand.filter { case (a, b) =>
+      val (sa, sb) = (shingles(a), shingles(b))
+      val inter = sa.count(sb.contains)
+      val jac = inter.toDouble / (sa.size + sb.size - inter).toDouble
+      java.math.BigDecimal.valueOf(jac).setScale(4, java.math.RoundingMode.HALF_UP)
+        .doubleValue() >= threshold
+    }
+  }
+
   /** End-to-end corpus dedup: MinHash-LSH candidate pairs -> transitive
     * clusters -> keep one representative (lowest id) per cluster. Documents
     * not in any near-dup cluster survive untouched.
+    *
+    * An input the plan estimates at most [[LocalDedupMaxBytes]] (no count
+    * job decides) is signed in one collect job and paired, clustered and
+    * resolved on the driver ([[localPairs]], the union-find), which skips
+    * the distributed path's caches, checkpoints and per-exchange jobs; the
+    * answer is the same.
     */
   def dedupCorpus(df: DataFrame, idCol: String, textCol: String,
                   numHashes: Int = 32, bands: Int = 8, shingleK: Int = 3,
                   threshold: Double = 0.8, portableHash: Boolean = false): DataFrame = {
-    val pairs = minhashPairs(df, idCol, textCol, numHashes, bands, shingleK, threshold,
-      portableHash = portableHash)
-    val comps = connectedComponents(pairs)
-    val losers = comps.filter(col("id") =!= col("label"))
-      .select(col("id").as(idCol))
+    val signed = signedSide(df, idCol, textCol, numHashes, bands, shingleK, portableHash)
+    val losers =
+      if (df.queryExecution.optimizedPlan.stats.sizeInBytes <= LocalDedupMaxBytes) {
+        val rows = signed.select(col("__id"), col("__sh"), col("__bk")).collect()
+        val spark = df.sparkSession
+        import spark.implicits._
+        unionFind(localPairs(rows, threshold, maxBucket = 1000))
+          .collect { case (id, label) if id != label => id }.toSeq.toDF(idCol)
+      } else {
+        connectedComponents(pairsFromSigned(signed, threshold))
+          .filter(col("id") =!= col("label"))
+          .select(col("id").as(idCol))
+      }
     df.join(losers, Seq(idCol), "left_anti")
   }
 

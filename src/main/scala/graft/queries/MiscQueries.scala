@@ -960,7 +960,7 @@ object MiscQueries {
              |  DATE '1996-03-06', DATE '1996-03-10', DATE '1996-03-14')
              |GROUP BY 1 ORDER BY 1""".stripMargin)),
 
-    // ---- METADATA-ANSWERED COUNT (ZoneMapPrune.countFromMeta over the
+    // ---- METADATA-ANSWERED COUNT (ZoneMapPrune.aggFromMeta over the
     // zmmeta v4 min:max:cnt slots): the Iceberg/Delta count-from-
     // manifest optimization — a date-range count(*) over a z-ordered
     // layout partitions the files into disjoint (zero rows, provably),
@@ -1003,7 +1003,7 @@ object MiscQueries {
              |WHERE CAST(o_orderdate AS DATE)
              |  BETWEEN DATE '1994-01-01' AND DATE '1996-12-31'""".stripMargin)),
 
-    // ---- METADATA-ANSWERED MIN/MAX (the same countFromMeta arm,
+    // ---- METADATA-ANSWERED MIN/MAX (the same aggFromMeta arm,
     // mixed outputs): a fully-covered file's min(c) IS its manifest
     // min_c (min/max ignore c's own nulls; any OTHER bounded column
     // with nulls forces that file to scan — per-column stats cannot
@@ -1052,7 +1052,7 @@ object MiscQueries {
              |WHERE CAST(o_orderdate AS DATE)
              |  BETWEEN DATE '1994-01-01' AND DATE '1996-12-31'""".stripMargin)),
 
-    // ---- METADATA-ANSWERED SUM/AVG (the same countFromMeta arm over
+    // ---- METADATA-ANSWERED SUM/AVG (the same aggFromMeta arm over
     // the zmmeta v5 min:max:cnt:sum slots): the most common dashboard
     // aggregate — `sum(measure) WHERE date BETWEEN …` — served from the
     // manifest for fully-covered files (exact integer sums, addExact,
@@ -1195,7 +1195,7 @@ object MiscQueries {
              |WHERE p_size = 7
              |GROUP BY 1 ORDER BY 1""".stripMargin)),
 
-    // ---- METADATA-ANSWERED `IS NULL` COUNT (the countFromMeta arm's
+    // ---- METADATA-ANSWERED `IS NULL` COUNT (the aggFromMeta arm's
     // complement conjunct): `count(*) WHERE c IS NULL` is answerable
     // per covered file as `n − cnt_c` — the manifest already carries
     // both numbers — composed under the general survivor-subset law
@@ -1292,7 +1292,7 @@ object MiscQueries {
              |GROUP BY 1 ORDER BY 1""".stripMargin)),
 
     // ---- GROUPED METADATA COUNTS over a CLUSTERED layout (the
-    // daily-counts dashboard shape, groupedCountFromMeta): files
+    // daily-counts dashboard shape, aggFromMeta): files
     // written one-per-priority are SINGLE-VALUED in the group key
     // (min == max in the manifest), so their per-group counts answer
     // from metadata and only the deliberately-mixed file scans; the

@@ -12,8 +12,9 @@ case class DocBuf(items: List[String])
   * the agg()-syntax integration of A1). The buffer accumulates serialized
   * documents (same state shape as semanticReduce's collect_list, partial
   * aggregation included); the model runs once per group in `finish`, via
-  * the identical hierarchical fanIn fold — so this composes with any other
-  * aggregate in one groupBy/agg pass and registers as a SQL UDAF.
+  * the same hierarchical fanIn fold ([[SemanticOps.foldLevels]] over one
+  * group) — so this composes with any other aggregate in one groupBy/agg
+  * pass and registers as a SQL UDAF.
   *
   * Determinism: finish sorts the collected docs, so the fold order (and
   * with it the stub client's output) is independent of partial-aggregation
@@ -28,15 +29,8 @@ case class SemanticAgg(instruction: String, schemaDdl: String,
   override def reduce(b: DocBuf, doc: String): DocBuf = DocBuf(doc :: b.items)
   override def merge(a: DocBuf, b: DocBuf): DocBuf = DocBuf(a.items ::: b.items)
 
-  override def finish(r: DocBuf): String = {
-    def fold(items: Seq[String]): String =
-      if (items.isEmpty) client.complete(s"$instruction\n(no documents)", schemaDdl)
-      else if (items.size <= fanIn)
-        client.complete(s"$instruction\n" + items.mkString("\n"), schemaDdl)
-      else fold(items.grouped(fanIn).map(g =>
-        client.complete(s"$instruction\n" + g.mkString("\n"), schemaDdl)).toSeq)
-    fold(r.items.sorted)
-  }
+  override def finish(r: DocBuf): String =
+    SemanticOps.foldLevels(IndexedSeq(r.items.sorted), instruction, schemaDdl, client, fanIn).head
 
   override def bufferEncoder: Encoder[DocBuf] = Encoders.product[DocBuf]
   override def outputEncoder: Encoder[String] = Encoders.STRING

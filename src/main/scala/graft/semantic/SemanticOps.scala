@@ -50,8 +50,9 @@ object SemanticOps extends Serializable {
   /** Per-session model-call accounting (A3/§4.1: accumulators instead of
     * the reference's stdout scraping; driver-readable after any action).
     * `calls` counts model invocations (one per request batch — the unit API
-    * cost scales with); `rows` counts documents sent through those calls;
-    * `retriedRows` counts rows re-sent on retry attempts.
+    * cost scales with), from semantic maps and reduce levels alike; `rows`
+    * counts prompts sent through those calls; `retriedRows` counts rows
+    * re-sent on retry attempts.
     */
   case class Metrics(calls: org.apache.spark.util.LongAccumulator,
                      rows: org.apache.spark.util.LongAccumulator,
@@ -84,13 +85,17 @@ object SemanticOps extends Serializable {
     }(Encoders.row(outSchema)).drop("__prompt")
   }
 
+  /** Prompts per model request: `semanticMap`'s default batch and the
+    * request size of every reduce level. */
+  private val DefaultBatchSize = 16
+
   /** Schema-constrained map with validate/retry/dead-letter. `validations`
     * are SQL boolean expressions over the *output* fields (P4 style, e.g.
     * "size(split(abstract_summary, '\\s+')) >= 25").
     */
   def semanticMap(df: DataFrame, template: String, outputSchema: StructType,
                   client: ModelClient, validations: Seq[String] = Nil,
-                  retries: Int = 2, batchSize: Int = 16): SemanticResult = {
+                  retries: Int = 2, batchSize: Int = DefaultBatchSize): SemanticResult = {
     val ddl = outputSchema.toDDL
     val inCols = df.columns
     val keepCols = inCols.filterNot(outputSchema.fieldNames.contains)
@@ -99,11 +104,18 @@ object SemanticOps extends Serializable {
     // dead-lettered instead of slipping past both filters below
     val validExpr = coalesce(
       validations.map(expr).reduceOption(_ && _).getOrElse(lit(true)), lit(false))
+    val sc = df.sparkSession.sparkContext
 
     var pending = df
     var ok: Option[DataFrame] = None
     var attempt = 0
-    while (attempt <= retries && !pending.isEmpty) {
+    var invalidRows = 0L
+    do {
+      // the attempt's own checkpoint job counts its invalid rows, so no
+      // probe job decides whether another attempt is needed
+      val invalid = sc.longAccumulator
+      val countInvalid = udf { (valid: Boolean) => if (!valid) invalid.add(1L); valid }
+        .asNondeterministic()
       val salted = concat(renderTemplate(template), lit(s"\n#attempt=$attempt"))
       val parsed = callModel(pending, salted, client, ddl, batchSize, isRetry = attempt > 0)
         .withColumn("__out", from_json(col("__resp"), outputSchema))
@@ -113,15 +125,53 @@ object SemanticOps extends Serializable {
       // on re-execution) — and model passes are the expensive stage by far.
       val flat = parsed.select(
         (keepCols.map(col) ++ outputSchema.fieldNames.map(n => col(s"__out.$n").as(n))): _*)
+        .withColumn("__valid", countInvalid(validExpr))
         .localCheckpoint()
-      val good = flat.filter(validExpr)
+      val good = flat.filter(col("__valid")).drop("__valid")
       ok = Some(ok.map(_.unionByName(good)).getOrElse(good))
-      pending = flat.filter(!validExpr).select(inCols.map(col): _*)
+      pending = flat.filter(!col("__valid")).select(inCols.map(col): _*)
+      invalidRows = invalid.value
       attempt += 1
-    }
+    } while (attempt <= retries && invalidRows > 0)
     val dead = pending.withColumn("__error",
       lit(s"validation failed after ${retries + 1} attempts"))
-    SemanticResult(ok.getOrElse(df.limit(0)), dead)
+    SemanticResult(ok.get, dead)
+  }
+
+  /** Groups one reduce task folds together, level by level: it bounds the
+    * doc lists and answers a task holds at once to 256 groups. */
+  private val ReduceWindowRows = 256
+
+  /** The hierarchical fold of each of `groups` (one list of serialized
+    * documents per group), run one level at a time across all of them: a
+    * group of at most `fanIn` items folds to its answer, a larger one to a
+    * summary per `fanIn` slice, which the next level folds again. Each
+    * level's prompts go out in requests of [[DefaultBatchSize]]; `request`
+    * sees the size of each. The prompts are exactly those of the
+    * per-group recursion, so the answers are too.
+    */
+  private[semantic] def foldLevels(groups: IndexedSeq[Seq[String]], instruction: String,
+                                   ddl: String, client: ModelClient, fanIn: Int,
+                                   request: Int => Unit = _ => ()): IndexedSeq[String] = {
+    val answers = new Array[String](groups.size)
+    var live = groups.indices.map(i => (i, groups(i)))
+    while (live.nonEmpty) {
+      val prompts = live.map { case (_, items) =>
+        if (items.isEmpty) Seq(s"$instruction\n(no documents)")
+        else items.grouped(fanIn).map(g => s"$instruction\n" + g.mkString("\n")).toSeq
+      }
+      val resps = prompts.flatten.grouped(DefaultBatchSize).flatMap { batch =>
+        request(batch.size)
+        client.completeBatch(batch, ddl)
+      }.toIndexedSeq
+      var next = 0
+      live = live.zip(prompts).flatMap { case ((i, items), ps) =>
+        val out = resps.slice(next, next + ps.size)
+        next += ps.size
+        if (items.size <= fanIn) { answers(i) = out.head; None } else Some((i, out))
+      }
+    }
+    answers.toIndexedSeq
   }
 
   /** Semantic reduce (A1): fold all records of a group into one synthesized
@@ -133,7 +183,9 @@ object SemanticOps extends Serializable {
     * are synthesized again until one remains. This is the distributed analog
     * of DocETL's optimizer decomposing a too-large reduce (SURVEY §4.1), and
     * it bounds every single model call to fanIn documents regardless of
-    * group size.
+    * group size. The fold runs level by level across a window of up to
+    * [[ReduceWindowRows]] groups ([[foldLevels]]), so a level costs one
+    * batched request per [[DefaultBatchSize]] prompts, not one per prompt.
     */
   def semanticReduce(df: DataFrame, keyCols: Seq[String], instruction: String,
                      outputSchema: StructType, client: ModelClient,
@@ -148,14 +200,12 @@ object SemanticOps extends Serializable {
 
     val outSchema = StructType(grouped.schema.fields.dropRight(1) :+ StructField("__resp", StringType))
     val docsIdx = grouped.schema.fieldIndex("__docs")
+    val m = metrics(df.sparkSession)
     val folded = grouped.mapPartitions { rows =>
-      rows.map { r =>
-        def fold(items: Seq[String]): String =
-          if (items.isEmpty) client.complete(s"$instruction\n(no documents)", ddl)
-          else if (items.size <= fanIn) client.complete(s"$instruction\n" + items.mkString("\n"), ddl)
-          else fold(items.grouped(fanIn).map(g => client.complete(s"$instruction\n" + g.mkString("\n"), ddl)).toSeq)
-        val docs = r.getSeq[String](docsIdx)
-        Row.fromSeq(r.toSeq.dropRight(1) :+ fold(docs))
+      rows.grouped(ReduceWindowRows).flatMap { window =>
+        val answers = foldLevels(window.map(_.getSeq[String](docsIdx)).toIndexedSeq,
+          instruction, ddl, client, fanIn, n => { m.calls.add(1); m.rows.add(n.toLong) })
+        window.lazyZip(answers).map((r, resp) => Row.fromSeq(r.toSeq.dropRight(1) :+ resp))
       }
     }(Encoders.row(outSchema))
 
@@ -171,7 +221,7 @@ object SemanticOps extends Serializable {
     * dropped as if the judge had said no.
     */
   def semanticFilter(df: DataFrame, criteria: String, client: ModelClient,
-                     batchSize: Int = 16): SemanticResult = {
+                     batchSize: Int = DefaultBatchSize): SemanticResult = {
     val schema = StructType(Seq(
       StructField("passed", BooleanType), StructField("rationale", StringType)))
     val res = semanticMap(df, criteria, schema, client,

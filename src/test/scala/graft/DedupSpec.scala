@@ -100,6 +100,23 @@ class DedupSpec extends SparkSpec {
     assert(!surviving.contains(4L))
   }
 
+  test("small-corpus dedupCorpus equals the distributed composition in both hash modes, " +
+      "in at most 2 jobs") {
+    for (portable <- Seq(false, true)) {
+      val (kept, jobs) = jobsDuring(
+        Dedup.dedupCorpus(docs, "doc_id", "text", portableHash = portable))
+      assert(jobs <= 2, s"portable=$portable: dedupCorpus ran $jobs jobs")
+      val pairs = Dedup.minhashPairs(docs, "doc_id", "text", threshold = 0.8,
+        portableHash = portable)
+      val losers = Dedup.connectedComponents(pairs, smallGraphThreshold = 0L)
+        .filter(col("id") =!= col("label")).select(col("id").as("doc_id"))
+      val composed = docs.join(losers, Seq("doc_id"), "left_anti")
+      val keptRows = kept.as[(Long, String)].collect().toSet
+      assert(keptRows == composed.as[(Long, String)].collect().toSet, s"portable=$portable")
+      assert(keptRows.map(_._1) == Set(1L, 3L), s"portable=$portable")
+    }
+  }
+
   test("connected components converge on a long path graph (diameter >> 2^5)") {
     // path 0-1-2-...-100: min-label propagation alone moves label 0 one hop
     // per round, so the old fixed-5-round loop would have stopped unconverged

@@ -152,6 +152,49 @@ class SemanticOpsSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     }
   }
 
+  test("semanticMap over an empty frame returns the output columns and calls no model") {
+    val counting = new CountingClient("empty-map")
+    val res = SemanticOps.semanticMap(docs.filter(lit(false)), "Summarize: {{ input.text }}",
+      schema, counting)
+    assert(res.ok.columns.toSet == Set("doc_id", "text", "summary", "n"))
+    assert(res.ok.count() == 0 && res.dead.count() == 0)
+    assert(counting.requests.isEmpty)
+  }
+
+  test("a multi-level reduce sends one request per level, with the per-prompt recursion's answers") {
+    // g1 folds 5 -> 3 -> 2 -> 1 at fanIn 2, g2 3 -> 2 -> 1, g3 1 -> 1:
+    // ten prompts over three levels
+    val rows = Seq((1L, "g1", "aa"), (2L, "g1", "bb"), (3L, "g1", "cc"), (4L, "g1", "dd"),
+      (5L, "g1", "ee"), (6L, "g2", "ff"), (7L, "g2", "gg"), (8L, "g2", "hh"), (9L, "g3", "ii"))
+      .toDF("doc_id", "grp", "text")
+    val instruction = "Synthesize:"
+    val counting = new CountingClient("reduce-levels")
+    val m = SemanticOps.metrics(spark)
+    val (calls0, rows0) = (m.calls.sum, m.rows.sum)
+    val prior = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "1")
+    val out = try {
+      SemanticOps.semanticReduce(rows, Seq("grp"), instruction, schema, counting, fanIn = 2)
+        .as[(String, String, Long)].collect().toSet
+    } finally spark.conf.set("spark.sql.shuffle.partitions", prior)
+    assert(counting.requests == Seq(6, 3, 1), "one request per level, not one per prompt")
+    assert((m.calls.sum - calls0, m.rows.sum - rows0) == ((3L, 10L)))
+
+    val ddl = schema.toDDL
+    def fold(items: Seq[String]): String =
+      if (items.size <= 2) client.complete(s"$instruction\n" + items.mkString("\n"), ddl)
+      else fold(items.grouped(2).map(g =>
+        client.complete(s"$instruction\n" + g.mkString("\n"), ddl)).toSeq)
+    val docsOf = rows.as[(Long, String, String)].collect().toSeq.groupMap(_._2) {
+      case (id, _, text) => s"""{"doc_id":$id,"text":"$text"}""" }
+    val expected = docsOf.toSeq.map { case (g, ds) => (g, fold(ds.sorted)) }
+      .toDF("grp", "resp")
+      .select(col("grp"), from_json(col("resp"), schema).as("o"))
+      .select(col("grp"), col("o.summary"), col("o.n"))
+      .as[(String, String, Long)].collect().toSet
+    assert(out == expected)
+  }
+
   test("pipeline spec: validator rejects bad specs, rewriter decomposes optimized maps") {
     val bad = PipelineSpec("p", Seq(MapOp("m", "", Map("a" -> "string"))))
     intercept[IllegalArgumentException](Validator.validate(bad))
@@ -311,4 +354,23 @@ private class MalformedFor(marker: String) extends ModelClient {
   override def complete(prompt: String, schemaDdl: String): String =
     if (prompt.contains(marker)) """{"summary": "trunc"""
     else stub.complete(prompt, schemaDdl)
+}
+
+/** The stub's answers, recording the size of every request under `tag`
+  * (tasks run a deserialized copy, so the log lives in the companion). */
+private class CountingClient(tag: String) extends ModelClient {
+  private val stub = new StubModelClient()
+  CountingClient.log.put(tag, new java.util.concurrent.ConcurrentLinkedQueue[Int]())
+  def requests: Seq[Int] = CountingClient.log.get(tag).asScala.toSeq
+  override def complete(prompt: String, schemaDdl: String): String =
+    completeBatch(Seq(prompt), schemaDdl).head
+  override def completeBatch(prompts: Seq[String], schemaDdl: String): Seq[String] = {
+    CountingClient.log.get(tag).add(prompts.size)
+    prompts.map(stub.complete(_, schemaDdl))
+  }
+}
+
+private object CountingClient {
+  val log = new java.util.concurrent.ConcurrentHashMap[String,
+    java.util.concurrent.ConcurrentLinkedQueue[Int]]()
 }
