@@ -12,6 +12,13 @@ import org.apache.spark.sql.types._
   *
   * Response caching: implementations may memoize on (prompt, schema) —
   * the reference caches LLM responses by content (zara_hybrid_etl.py:43,63).
+  *
+  * Threads: `complete` and `completeBatch` may be called from several
+  * threads of one task at once — the semantic ops keep several requests
+  * in flight per task — so an implementation must be safe under concurrent
+  * calls. `StubModelClient` is (a pure function of its input, its schema
+  * cache a ConcurrentHashMap), and so is `HttpModelClient` (the JDK
+  * HttpClient and a Jackson mapper, both shareable across threads).
   */
 trait ModelClient extends Serializable {
   def complete(prompt: String, schemaDdl: String): String

@@ -19,9 +19,14 @@ case class DocBuf(items: List[String])
   * Determinism: finish sorts the collected docs, so the fold order (and
   * with it the stub client's output) is independent of partial-aggregation
   * merge order.
+  *
+  * Accounting: given a session's [[SemanticOps.Metrics]], `finish` counts
+  * its requests there like any other semantic op; the builders below hand
+  * them over wherever a session is at hand.
   */
 case class SemanticAgg(instruction: String, schemaDdl: String,
-                       client: ModelClient, fanIn: Int = 8)
+                       client: ModelClient, fanIn: Int = 8,
+                       metrics: Option[SemanticOps.Metrics] = None)
     extends Aggregator[String, DocBuf, String] {
   require(fanIn >= 2, "fanIn < 2 cannot converge")
 
@@ -30,7 +35,8 @@ case class SemanticAgg(instruction: String, schemaDdl: String,
   override def merge(a: DocBuf, b: DocBuf): DocBuf = DocBuf(a.items ::: b.items)
 
   override def finish(r: DocBuf): String =
-    SemanticOps.foldLevels(IndexedSeq(r.items.sorted), instruction, schemaDdl, client, fanIn).head
+    SemanticOps.foldLevels(IndexedSeq(r.items.sorted), instruction, schemaDdl, client, fanIn,
+      n => metrics.foreach(_.request(n))).head
 
   override def bufferEncoder: Encoder[DocBuf] = Encoders.product[DocBuf]
   override def outputEncoder: Encoder[String] = Encoders.STRING
@@ -40,11 +46,12 @@ object SemanticAgg {
 
   /** agg()-syntax column: synthesize one record per group from the given
     * JSON-doc column. Apply `from_json` on the result for typed fields.
+    * Its requests count in the active session's [[SemanticOps.metrics]].
     */
   def synthesize(docCol: Column, instruction: String, outputSchema: StructType,
                  client: ModelClient, fanIn: Int = 8): Column =
-    udaf(SemanticAgg(instruction, outputSchema.toDDL, client, fanIn),
-      Encoders.STRING)(docCol)
+    udaf(SemanticAgg(instruction, outputSchema.toDDL, client, fanIn,
+      SparkSession.getActiveSession.map(SemanticOps.metrics)), Encoders.STRING)(docCol)
 
   /** Same semantics as SemanticOps.semanticReduce but through the
     * Aggregator: one groupBy/agg pass, composable with other aggregates.
@@ -65,5 +72,6 @@ object SemanticAgg {
   def register(spark: SparkSession, name: String, instruction: String,
                outputSchema: StructType, client: ModelClient, fanIn: Int = 8): Unit =
     spark.udf.register(name,
-      udaf(SemanticAgg(instruction, outputSchema.toDDL, client, fanIn), Encoders.STRING))
+      udaf(SemanticAgg(instruction, outputSchema.toDDL, client, fanIn,
+        Some(SemanticOps.metrics(spark))), Encoders.STRING))
 }

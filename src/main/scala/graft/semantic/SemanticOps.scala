@@ -1,7 +1,11 @@
 package graft.semantic
 
+import java.util.concurrent.{Callable, ExecutionException, ExecutorService, Executors, Future}
+import java.util.concurrent.atomic.AtomicInteger
+
 import scala.util.matching.Regex
 
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -20,6 +24,12 @@ import org.apache.spark.sql.types._
   * over only the still-invalid rows (the reference retries per record in a
   * Python loop — same semantics, but here attempt k is a narrow pass over a
   * shrinking DataFrame instead of a per-row blocking loop).
+  *
+  * Within a task, model requests overlap: a map keeps up to
+  * [[RequestsInFlight]] requests out at once, and a reduce level sends its
+  * requests the same way (levels stay in order, since each folds the
+  * last one's answers). Answers are consumed in request order, so every
+  * prompt and answer is the serial one's.
   */
 object SemanticOps extends Serializable {
 
@@ -50,13 +60,21 @@ object SemanticOps extends Serializable {
   /** Per-session model-call accounting (A3/§4.1: accumulators instead of
     * the reference's stdout scraping; driver-readable after any action).
     * `calls` counts model invocations (one per request batch — the unit API
-    * cost scales with), from semantic maps and reduce levels alike; `rows`
+    * cost scales with), from semantic maps, reduce levels and
+    * [[SemanticAgg]] alike, on the task thread that sends them; `rows`
     * counts prompts sent through those calls; `retriedRows` counts rows
     * re-sent on retry attempts.
     */
   case class Metrics(calls: org.apache.spark.util.LongAccumulator,
                      rows: org.apache.spark.util.LongAccumulator,
-                     retriedRows: org.apache.spark.util.LongAccumulator)
+                     retriedRows: org.apache.spark.util.LongAccumulator) {
+    /** Counts one request of `prompts` prompts. */
+    def request(prompts: Int, retry: Boolean = false): Unit = {
+      calls.add(1)
+      rows.add(prompts.toLong)
+      if (retry) retriedRows.add(prompts.toLong)
+    }
+  }
 
   private val metricsBySession =
     new java.util.concurrent.ConcurrentHashMap[org.apache.spark.SparkContext, Metrics]()
@@ -75,19 +93,21 @@ object SemanticOps extends Serializable {
     val idx = withPrompt.schema.fieldIndex("__prompt")
     val m = metrics(in.sparkSession)
     withPrompt.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        m.calls.add(1)
-        m.rows.add(batch.size)
-        if (isRetry) m.retriedRows.add(batch.size)
+      val batches = rows.grouped(batchSize).map { batch => m.request(batch.size, isRetry); batch }
+      ModelRequests.inOrder(batches, RequestsInFlight) { batch =>
         val resps = client.completeBatch(batch.map(_.getString(idx)), schemaDdl)
         batch.lazyZip(resps).map((r, resp) => Row.fromSeq(r.toSeq :+ resp))
-      }
+      }.flatten
     }(Encoders.row(outSchema)).drop("__prompt")
   }
 
   /** Prompts per model request: `semanticMap`'s default batch and the
     * request size of every reduce level. */
   private val DefaultBatchSize = 16
+
+  /** Model requests one task keeps in flight at once, so a map task holds
+    * at most this many batches of rows, plus the one it is handing on. */
+  private val RequestsInFlight = 8
 
   /** Schema-constrained map with validate/retry/dead-letter. `validations`
     * are SQL boolean expressions over the *output* fields (P4 style, e.g.
@@ -146,9 +166,10 @@ object SemanticOps extends Serializable {
     * documents per group), run one level at a time across all of them: a
     * group of at most `fanIn` items folds to its answer, a larger one to a
     * summary per `fanIn` slice, which the next level folds again. Each
-    * level's prompts go out in requests of [[DefaultBatchSize]]; `request`
-    * sees the size of each. The prompts are exactly those of the
-    * per-group recursion, so the answers are too.
+    * level's prompts go out in requests of [[DefaultBatchSize]], up to
+    * [[RequestsInFlight]] of them at once; `request` sees the size of each,
+    * on the calling thread. The prompts are exactly those of the per-group
+    * recursion, so the answers are too.
     */
   private[semantic] def foldLevels(groups: IndexedSeq[Seq[String]], instruction: String,
                                    ddl: String, client: ModelClient, fanIn: Int,
@@ -160,10 +181,10 @@ object SemanticOps extends Serializable {
         if (items.isEmpty) Seq(s"$instruction\n(no documents)")
         else items.grouped(fanIn).map(g => s"$instruction\n" + g.mkString("\n")).toSeq
       }
-      val resps = prompts.flatten.grouped(DefaultBatchSize).flatMap { batch =>
-        request(batch.size)
-        client.completeBatch(batch, ddl)
-      }.toIndexedSeq
+      val batches = prompts.flatten.grouped(DefaultBatchSize).map { batch =>
+        request(batch.size); batch }
+      val resps = ModelRequests.inOrder(batches, RequestsInFlight)(client.completeBatch(_, ddl))
+        .flatten.toIndexedSeq
       var next = 0
       live = live.zip(prompts).flatMap { case ((i, items), ps) =>
         val out = resps.slice(next, next + ps.size)
@@ -185,7 +206,8 @@ object SemanticOps extends Serializable {
     * it bounds every single model call to fanIn documents regardless of
     * group size. The fold runs level by level across a window of up to
     * [[ReduceWindowRows]] groups ([[foldLevels]]), so a level costs one
-    * batched request per [[DefaultBatchSize]] prompts, not one per prompt.
+    * batched request per [[DefaultBatchSize]] prompts, not one per prompt,
+    * and those requests overlap.
     */
   def semanticReduce(df: DataFrame, keyCols: Seq[String], instruction: String,
                      outputSchema: StructType, client: ModelClient,
@@ -204,7 +226,7 @@ object SemanticOps extends Serializable {
     val folded = grouped.mapPartitions { rows =>
       rows.grouped(ReduceWindowRows).flatMap { window =>
         val answers = foldLevels(window.map(_.getSeq[String](docsIdx)).toIndexedSeq,
-          instruction, ddl, client, fanIn, n => { m.calls.add(1); m.rows.add(n.toLong) })
+          instruction, ddl, client, fanIn, m.request(_))
         window.lazyZip(answers).map((r, resp) => Row.fromSeq(r.toSeq.dropRight(1) :+ resp))
       }
     }(Encoders.row(outSchema))
@@ -228,4 +250,63 @@ object SemanticOps extends Serializable {
       validations = Seq("passed IS NOT NULL"), batchSize = batchSize)
     res.copy(ok = res.ok.filter(col("passed")).drop("passed", "rationale"))
   }
+}
+
+/** Runs model requests off the task thread, on one daemon pool per JVM, so
+  * a task's requests wait for the model side by side, not one after
+  * another. Kept apart from the serializable [[SemanticOps]] so the pool
+  * never rides along in a closure.
+  */
+private[semantic] object ModelRequests {
+
+  private lazy val pool: ExecutorService = {
+    val ids = new AtomicInteger
+    Executors.newCachedThreadPool { r =>
+      val t = new Thread(r, s"graft-model-request-${ids.incrementAndGet()}")
+      t.setDaemon(true)
+      t
+    }
+  }
+
+  /** `call` over `items`, up to `width` calls running at once; the results
+    * come back in the order of `items`. `items` is read on the calling
+    * thread, one item ahead of each call going out. Runs inside a task.
+    *
+    * A failed call fails the iterator with its own exception. Whether the
+    * task then fails or ends early without reading the iterator out, it
+    * waits for its calls still in flight before it completes (their
+    * results are dropped), so no call outlives its task.
+    */
+  def inOrder[A, B](items: Iterator[A], width: Int)(call: A => B): Iterator[B] =
+    new Iterator[B] {
+      private val inFlight = new java.util.ArrayDeque[Future[B]](width)
+      TaskContext.get().addTaskCompletionListener[Unit](_ => drain())
+
+      override def hasNext: Boolean = {
+        while (inFlight.size < width && items.hasNext) {
+          val item = items.next()
+          val request: Callable[B] = () => call(item)
+          inFlight.add(pool.submit(request))
+        }
+        !inFlight.isEmpty
+      }
+
+      override def next(): B = {
+        if (!hasNext) throw new NoSuchElementException("no model requests left")
+        try inFlight.poll().get()
+        catch { case e: ExecutionException => throw e.getCause }
+      }
+
+      private def drain(): Unit = {
+        var interrupted = false
+        while (!inFlight.isEmpty) {
+          try { inFlight.peek().get(); inFlight.poll() }
+          catch {
+            case _: InterruptedException => interrupted = true
+            case _: ExecutionException => inFlight.poll()
+          }
+        }
+        if (interrupted) Thread.currentThread().interrupt()
+      }
+    }
 }

@@ -48,9 +48,18 @@ object Sinks {
     concat(front, coalesce(body, lit("")), quotes, bullets)
   }
 
-  /** K3 writer: one directory per slug, markdown content as text. */
+  /** K3 writer: one directory per slug, markdown content as text.
+    *
+    * The rows are hash-partitioned by slug first, so each slug lands in
+    * one file and the slug directories are written by parallel tasks (a
+    * file costs several filesystem calls, which add up when one task
+    * writes them all). The partition count is the session's parallelism,
+    * given explicitly: adaptive execution would coalesce a repartition
+    * without one back to a single task.
+    */
   def writeMarkdown(df: DataFrame, headlineCol: String, mdCol: Column, path: String): Unit =
     df.select(TextFns.slugify(col(headlineCol)).as("slug"), mdCol.as("value"))
+      .repartition(df.sparkSession.sparkContext.defaultParallelism, col("slug"))
       .write.mode("overwrite").partitionBy("slug").text(path)
 
   /** K6: n-field manifest JSON (ingestion manifest analog). */

@@ -195,6 +195,49 @@ class SemanticOpsSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     assert(out == expected)
   }
 
+  test("semanticMap keeps several requests of one task in flight, with the serial answers") {
+    val rows = (1L to 8L).map(i => (i, s"document $i words here")).toDF("doc_id", "text")
+      .repartition(1)
+    val counting = new CountingClient("overlap", sleepMs = 50)
+    val out = SemanticOps.semanticMap(rows, "Summarize: {{ input.text }}", schema, counting,
+      batchSize = 2).ok.orderBy("doc_id").collect().toSeq
+    assert(counting.requests == Seq(2, 2, 2, 2))
+    assert(counting.peak > 1, "a one-task map must overlap its requests")
+    val serial = SemanticOps.semanticMap(rows, "Summarize: {{ input.text }}", schema, client,
+      batchSize = 100).ok.orderBy("doc_id").collect().toSeq
+    assert(out == serial)
+  }
+
+  test("a request that throws fails the action with its exception, and no request outlives it") {
+    val rows = (1L to 8L).map(i => (i, s"document $i words here")).toDF("doc_id", "text")
+      .repartition(1).sortWithinPartitions("doc_id")
+    // the poisoned first request fails at once, while the other seven
+    // still wait for the model
+    val counting = new CountingClient("failing", sleepMs = 200, poison = Some("document 1 "))
+    val e = intercept[Exception] {
+      SemanticOps.semanticMap(rows, "Summarize: {{ input.text }}", schema, counting,
+        batchSize = 1).ok.collect()
+    }
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(causes.exists(c => c.isInstanceOf[IllegalStateException] &&
+      c.getMessage == "model refused: document 1 "), s"unexpected failure: $e")
+    assert(counting.active == 0, "a request still ran after the action returned")
+  }
+
+  test("semanticReduceAgg counts its requests in the session metrics") {
+    import graft.semantic.SemanticAgg
+    val rows = Seq((1L, "g1", "aa"), (2L, "g1", "bb"), (3L, "g1", "cc"), (4L, "g2", "dd"))
+      .toDF("doc_id", "grp", "text")
+    val counting = new CountingClient("reduce-agg")
+    val m = SemanticOps.metrics(spark)
+    val (calls0, rows0) = (m.calls.sum, m.rows.sum)
+    assert(SemanticAgg.semanticReduceAgg(rows, Seq("grp"), "Synthesize:", schema, counting,
+      fanIn = 2).collect().length == 2)
+    assert(counting.requests.nonEmpty)
+    assert((m.calls.sum - calls0, m.rows.sum - rows0) ==
+      ((counting.requests.size.toLong, counting.requests.sum.toLong)))
+  }
+
   test("pipeline spec: validator rejects bad specs, rewriter decomposes optimized maps") {
     val bad = PipelineSpec("p", Seq(MapOp("m", "", Map("a" -> "string"))))
     intercept[IllegalArgumentException](Validator.validate(bad))
@@ -356,21 +399,38 @@ private class MalformedFor(marker: String) extends ModelClient {
     else stub.complete(prompt, schemaDdl)
 }
 
-/** The stub's answers, recording the size of every request under `tag`
-  * (tasks run a deserialized copy, so the log lives in the companion). */
-private class CountingClient(tag: String) extends ModelClient {
+/** The stub's answers, recording under `tag` the size of every request and
+  * how many ran at once at the peak (tasks run a deserialized copy, so the
+  * log lives in the companion). A request with a prompt containing
+  * `poison` throws at once; any other takes `sleepMs`.
+  */
+private class CountingClient(tag: String, sleepMs: Long = 0, poison: Option[String] = None)
+    extends ModelClient {
   private val stub = new StubModelClient()
-  CountingClient.log.put(tag, new java.util.concurrent.ConcurrentLinkedQueue[Int]())
-  def requests: Seq[Int] = CountingClient.log.get(tag).asScala.toSeq
+  CountingClient.log.put(tag, CountingClient.Log())
+  private def log: CountingClient.Log = CountingClient.log.get(tag)
+  def requests: Seq[Int] = log.sizes.asScala.toSeq
+  def active: Int = log.active.get
+  def peak: Int = log.peak.get
   override def complete(prompt: String, schemaDdl: String): String =
     completeBatch(Seq(prompt), schemaDdl).head
   override def completeBatch(prompts: Seq[String], schemaDdl: String): Seq[String] = {
-    CountingClient.log.get(tag).add(prompts.size)
-    prompts.map(stub.complete(_, schemaDdl))
+    log.sizes.add(prompts.size)
+    log.peak.accumulateAndGet(log.active.incrementAndGet(), (a, b) => math.max(a, b))
+    try {
+      poison.filter(p => prompts.exists(_.contains(p))).foreach { p =>
+        throw new IllegalStateException(s"model refused: $p") }
+      Thread.sleep(sleepMs)
+      prompts.map(stub.complete(_, schemaDdl))
+    } finally log.active.decrementAndGet()
   }
 }
 
 private object CountingClient {
-  val log = new java.util.concurrent.ConcurrentHashMap[String,
-    java.util.concurrent.ConcurrentLinkedQueue[Int]]()
+  final case class Log(
+      sizes: java.util.concurrent.ConcurrentLinkedQueue[Int] =
+        new java.util.concurrent.ConcurrentLinkedQueue[Int](),
+      active: AtomicInteger = new AtomicInteger,
+      peak: AtomicInteger = new AtomicInteger)
+  val log = new java.util.concurrent.ConcurrentHashMap[String, Log]()
 }

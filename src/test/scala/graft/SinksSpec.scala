@@ -38,6 +38,21 @@ class SinksSpec extends SparkSpec {
     assert(md.contains("word_count: 2"))
   }
 
+  test("markdown sink writes one file per slug, whatever partitions its rows come from") {
+    val md = Seq("# first take", "# second take")
+    val df = spark.sparkContext.parallelize(md.map(("One Shared Headline", _)), 2)
+      .toDF("headline", "md")
+    assert(df.rdd.glom().collect().map(_.length).toSeq == Seq(1, 1))
+    val out = Files.createTempDirectory("graft_md_").toFile
+    Sinks.writeMarkdown(df, "headline", col("md"), out.toString)
+    val slugDirs = out.listFiles().filter(_.isDirectory)
+    assert(slugDirs.length == 1, slugDirs.toSeq)
+    val files = slugDirs.head.listFiles().filter(f => f.isFile && !f.getName.startsWith("."))
+    assert(files.length == 1, s"one slug must land in one file, got ${files.toSeq}")
+    val lines = scala.io.Source.fromFile(files.head, "UTF-8")
+    try assert(lines.getLines().toSet == md.toSet) finally lines.close()
+  }
+
   test("quality stats mirror the reference fields (zara_hybrid_etl.py:233-239)") {
     val st = Sinks.qualityStats(articles, "quality_score", 0.7).collect()(0)
     assert(st.getAs[Long]("total_articles") == 3)
