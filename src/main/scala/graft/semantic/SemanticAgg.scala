@@ -20,15 +20,17 @@ case class DocBuf(items: List[String])
   * with it the stub client's output) is independent of partial-aggregation
   * merge order.
   *
-  * Accounting: given a session's [[SemanticOps.Metrics]], `finish` counts
-  * its requests there like any other semantic op; the builders below hand
-  * them over wherever a session is at hand.
+  * Accounting: `finish` counts its requests in [[SemanticOps.metrics]] of
+  * the session active where the Aggregator is built (every session of one
+  * SparkContext shares them), like any other semantic op.
   */
 case class SemanticAgg(instruction: String, schemaDdl: String,
-                       client: ModelClient, fanIn: Int = 8,
-                       metrics: Option[SemanticOps.Metrics] = None)
+                       client: ModelClient, fanIn: Int = 8)
     extends Aggregator[String, DocBuf, String] {
   require(fanIn >= 2, "fanIn < 2 cannot converge")
+
+  private val metrics = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+    .map(SemanticOps.metrics)
 
   override def zero: DocBuf = DocBuf(Nil)
   override def reduce(b: DocBuf, doc: String): DocBuf = DocBuf(doc :: b.items)
@@ -46,12 +48,11 @@ object SemanticAgg {
 
   /** agg()-syntax column: synthesize one record per group from the given
     * JSON-doc column. Apply `from_json` on the result for typed fields.
-    * Its requests count in the active session's [[SemanticOps.metrics]].
     */
   def synthesize(docCol: Column, instruction: String, outputSchema: StructType,
                  client: ModelClient, fanIn: Int = 8): Column =
-    udaf(SemanticAgg(instruction, outputSchema.toDDL, client, fanIn,
-      SparkSession.getActiveSession.map(SemanticOps.metrics)), Encoders.STRING)(docCol)
+    udaf(SemanticAgg(instruction, outputSchema.toDDL, client, fanIn),
+      Encoders.STRING)(docCol)
 
   /** Same semantics as SemanticOps.semanticReduce but through the
     * Aggregator: one groupBy/agg pass, composable with other aggregates.
@@ -72,6 +73,5 @@ object SemanticAgg {
   def register(spark: SparkSession, name: String, instruction: String,
                outputSchema: StructType, client: ModelClient, fanIn: Int = 8): Unit =
     spark.udf.register(name,
-      udaf(SemanticAgg(instruction, outputSchema.toDDL, client, fanIn,
-        Some(SemanticOps.metrics(spark))), Encoders.STRING))
+      udaf(SemanticAgg(instruction, outputSchema.toDDL, client, fanIn), Encoders.STRING))
 }

@@ -1,11 +1,12 @@
 package graft.semantic
 
-import java.util.concurrent.{Callable, ExecutionException, ExecutorService, Executors, Future}
+import java.util.concurrent.{Callable, CancellationException, ExecutionException, ExecutorService,
+  Executors, Future, TimeUnit, TimeoutException}
 import java.util.concurrent.atomic.AtomicInteger
 
 import scala.util.matching.Regex
 
-import org.apache.spark.TaskContext
+import org.apache.spark.{TaskContext, TaskKilledException}
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -29,7 +30,9 @@ import org.apache.spark.sql.types._
   * [[RequestsInFlight]] requests out at once, and a reduce level sends its
   * requests the same way (levels stay in order, since each folds the
   * last one's answers). Answers are consumed in request order, so every
-  * prompt and answer is the serial one's.
+  * prompt and answer is the serial one's. A failed request fails its task
+  * with its own exception; the requests still out then are cancelled
+  * ([[ModelRequests]]), as they are when the task is killed.
   */
 object SemanticOps extends Serializable {
 
@@ -94,7 +97,7 @@ object SemanticOps extends Serializable {
     val m = metrics(in.sparkSession)
     withPrompt.mapPartitions { rows =>
       val batches = rows.grouped(batchSize).map { batch => m.request(batch.size, isRetry); batch }
-      ModelRequests.inOrder(batches, RequestsInFlight) { batch =>
+      ModelRequests.forTask(RequestsInFlight).inOrder(batches) { batch =>
         val resps = client.completeBatch(batch.map(_.getString(idx)), schemaDdl)
         batch.lazyZip(resps).map((r, resp) => Row.fromSeq(r.toSeq :+ resp))
       }.flatten
@@ -183,8 +186,9 @@ object SemanticOps extends Serializable {
       }
       val batches = prompts.flatten.grouped(DefaultBatchSize).map { batch =>
         request(batch.size); batch }
-      val resps = ModelRequests.inOrder(batches, RequestsInFlight)(client.completeBatch(_, ddl))
-        .flatten.toIndexedSeq
+      val requests = new ModelRequests(RequestsInFlight)
+      val resps = try requests.inOrder(batches)(client.completeBatch(_, ddl)).flatten.toIndexedSeq
+        finally requests.cancel()
       var next = 0
       live = live.zip(prompts).flatMap { case ((i, items), ps) =>
         val out = resps.slice(next, next + ps.size)
@@ -252,11 +256,89 @@ object SemanticOps extends Serializable {
   }
 }
 
-/** Runs model requests off the task thread, on one daemon pool per JVM, so
-  * a task's requests wait for the model side by side, not one after
-  * another. Kept apart from the serializable [[SemanticOps]] so the pool
-  * never rides along in a closure.
+/** The model requests one consumer has out at once, at most `width` of
+  * them, run off the task thread on one daemon pool per JVM, so they wait
+  * for the model side by side, not one after another. Kept apart from the
+  * serializable [[SemanticOps]] so the pool never rides along in a closure.
+  *
+  * Ending early: [[cancel]] cancels the requests still out, interrupting
+  * those already running, and returns once none is inside its call any
+  * more, so no request outlives its consumer. A task's consumer gets it
+  * from [[ModelRequests.forTask]]'s completion listener; a consumer that
+  * reads its answers out at once calls it in a `finally`.
   */
+private[semantic] final class ModelRequests(width: Int) {
+  private val inFlight = new java.util.ArrayDeque[Future[_]](width)
+  // calls between their start and their end, on the pool's threads
+  private val running = new AtomicInteger
+  @volatile private var cancelled = false
+
+  /** `call` over `items`, up to `width` calls out at once; the results
+    * come back in the order of `items`. `items` is read on the calling
+    * thread, one item ahead of each call going out. A failed call fails
+    * the iterator with its own exception; a killed task stops waiting.
+    */
+  def inOrder[A, B](items: Iterator[A])(call: A => B): Iterator[B] = new Iterator[B] {
+    override def hasNext: Boolean = {
+      while (inFlight.size < width && items.hasNext) send(items.next(), call)
+      !inFlight.isEmpty
+    }
+
+    override def next(): B = {
+      if (!hasNext) throw new NoSuchElementException("no model requests left")
+      // the request stays in flight, for `cancel` to find, until it is done
+      val out = await(inFlight.peek()).asInstanceOf[B]
+      inFlight.poll()
+      out
+    }
+  }
+
+  private def send[A, B](item: A, call: A => B): Unit = {
+    val request: Callable[B] = () => {
+      running.incrementAndGet()
+      // `cancel` sets the flag before it reads `running`, so a call either
+      // counts as running there or sees the flag here
+      try {
+        if (cancelled) throw new CancellationException("model requests cancelled")
+        call(item)
+      } finally if (running.decrementAndGet() == 0) synchronized { notifyAll() }
+    }
+    inFlight.add(ModelRequests.pool.submit(request))
+  }
+
+  /** The call's result. Inside a task, the wait checks every
+    * [[ModelRequests.KillCheckMs]] whether the task was killed, since a kill
+    * need not interrupt the task thread. */
+  private def await(f: Future[_]): Any = {
+    val task = TaskContext.get()
+    try {
+      if (task == null) f.get()
+      else {
+        var out: Option[Any] = None
+        while (out.isEmpty) {
+          if (task.isInterrupted()) throw new TaskKilledException("killed awaiting a model request")
+          try out = Some(f.get(ModelRequests.KillCheckMs, TimeUnit.MILLISECONDS))
+          catch { case _: TimeoutException => }
+        }
+        out.get
+      }
+    } catch { case e: ExecutionException => throw e.getCause }
+  }
+
+  /** Cancels the requests still out and waits until none is running. */
+  def cancel(): Unit = {
+    cancelled = true
+    inFlight.forEach(f => f.cancel(true))
+    inFlight.clear()
+    var interrupted = false
+    synchronized {
+      while (running.get > 0)
+        try wait() catch { case _: InterruptedException => interrupted = true }
+    }
+    if (interrupted) Thread.currentThread().interrupt()
+  }
+}
+
 private[semantic] object ModelRequests {
 
   private lazy val pool: ExecutorService = {
@@ -268,45 +350,15 @@ private[semantic] object ModelRequests {
     }
   }
 
-  /** `call` over `items`, up to `width` calls running at once; the results
-    * come back in the order of `items`. `items` is read on the calling
-    * thread, one item ahead of each call going out. Runs inside a task.
-    *
-    * A failed call fails the iterator with its own exception. Whether the
-    * task then fails or ends early without reading the iterator out, it
-    * waits for its calls still in flight before it completes (their
-    * results are dropped), so no call outlives its task.
-    */
-  def inOrder[A, B](items: Iterator[A], width: Int)(call: A => B): Iterator[B] =
-    new Iterator[B] {
-      private val inFlight = new java.util.ArrayDeque[Future[B]](width)
-      TaskContext.get().addTaskCompletionListener[Unit](_ => drain())
+  private val KillCheckMs = 50L
 
-      override def hasNext: Boolean = {
-        while (inFlight.size < width && items.hasNext) {
-          val item = items.next()
-          val request: Callable[B] = () => call(item)
-          inFlight.add(pool.submit(request))
-        }
-        !inFlight.isEmpty
-      }
-
-      override def next(): B = {
-        if (!hasNext) throw new NoSuchElementException("no model requests left")
-        try inFlight.poll().get()
-        catch { case e: ExecutionException => throw e.getCause }
-      }
-
-      private def drain(): Unit = {
-        var interrupted = false
-        while (!inFlight.isEmpty) {
-          try { inFlight.peek().get(); inFlight.poll() }
-          catch {
-            case _: InterruptedException => interrupted = true
-            case _: ExecutionException => inFlight.poll()
-          }
-        }
-        if (interrupted) Thread.currentThread().interrupt()
-      }
-    }
+  /** Requests for the running task, cancelled when it completes: after a
+    * failure, a kill or a consumer that stopped reading early. The
+    * listener holds only this window of at most `width` requests, not the
+    * input they are read from. */
+  def forTask(width: Int): ModelRequests = {
+    val requests = new ModelRequests(width)
+    TaskContext.get().addTaskCompletionListener[Unit](_ => requests.cancel())
+    requests
+  }
 }

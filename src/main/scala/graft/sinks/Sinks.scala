@@ -55,11 +55,16 @@ object Sinks {
     * file costs several filesystem calls, which add up when one task
     * writes them all). The partition count is the session's parallelism,
     * given explicitly: adaptive execution would coalesce a repartition
-    * without one back to a single task.
+    * without one back to a single task. Articles that share a slug follow
+    * one another in the order of their markdown text, not in the order the
+    * shuffle fetched them, so a rerun writes the same bytes. (The input's
+    * own order is not kept: the repartition makes any sort under it moot,
+    * and the optimizer drops that sort.)
     */
   def writeMarkdown(df: DataFrame, headlineCol: String, mdCol: Column, path: String): Unit =
     df.select(TextFns.slugify(col(headlineCol)).as("slug"), mdCol.as("value"))
       .repartition(df.sparkSession.sparkContext.defaultParallelism, col("slug"))
+      .sortWithinPartitions("slug", "value")
       .write.mode("overwrite").partitionBy("slug").text(path)
 
   /** K6: n-field manifest JSON (ingestion manifest analog). */

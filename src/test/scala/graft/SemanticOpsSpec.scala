@@ -224,6 +224,51 @@ class SemanticOpsSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     assert(counting.active == 0, "a request still ran after the action returned")
   }
 
+  test("cancelling a job cancels its model requests in flight") {
+    val rows = (1L to 8L).map(i => (i, s"document $i words here")).toDF("doc_id", "text")
+      .repartition(1)
+    // each request would wait far longer than the test allows
+    val counting = new CountingClient("cancelled", sleepMs = 60000)
+    val sc = spark.sparkContext
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val action = new Thread(() => {
+      // a job group cancelled without interrupting the task thread
+      sc.setJobGroup("graft-cancelled-model", "slow model requests")
+      try SemanticOps.semanticMap(rows, "Summarize: {{ input.text }}", schema, counting,
+        batchSize = 1).ok.collect()
+      catch { case e: Throwable => failure.set(e) }
+      finally sc.clearJobGroup()
+    })
+    def within(ms: Long)(done: => Boolean): Boolean = {
+      val end = System.currentTimeMillis() + ms
+      while (!done && System.currentTimeMillis() < end) Thread.sleep(20)
+      done
+    }
+    action.start()
+    assert(within(60000)(counting.active == 8), s"${counting.active} requests in flight")
+    sc.cancelJobGroup("graft-cancelled-model")
+    action.join(60000)
+    assert(failure.get != null, "the cancelled action returned rows")
+    assert(within(5000)(counting.active == 0),
+      s"${counting.active} requests still ran 5 s after the cancel")
+  }
+
+  test("folding many groups in one task adds no task-completion listener per group") {
+    import graft.semantic.{DocBuf, SemanticAgg}
+    val agg = SemanticAgg("Synthesize:", schema.toDDL, client, fanIn = 2)
+    val added = spark.sparkContext.parallelize(Seq(0), 1).map { _ =>
+      val ctx = org.apache.spark.TaskContext.get()
+      val callbacks = ctx.getClass.getDeclaredField("onCompleteCallbacks")
+      callbacks.setAccessible(true)
+      def listeners: Int = callbacks.get(ctx).asInstanceOf[java.util.Stack[_]].size
+      val before = listeners
+      // two reduce levels per group
+      (1 to 200).foreach(g => agg.finish(DocBuf(List(s"a$g", s"b$g", s"c$g"))))
+      listeners - before
+    }.collect()
+    assert(added.toSeq == Seq(0))
+  }
+
   test("semanticReduceAgg counts its requests in the session metrics") {
     import graft.semantic.SemanticAgg
     val rows = Seq((1L, "g1", "aa"), (2L, "g1", "bb"), (3L, "g1", "cc"), (4L, "g2", "dd"))

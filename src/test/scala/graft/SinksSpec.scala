@@ -39,7 +39,8 @@ class SinksSpec extends SparkSpec {
   }
 
   test("markdown sink writes one file per slug, whatever partitions its rows come from") {
-    val md = Seq("# first take", "# second take")
+    // the file holds them in the order of their text, not the input's
+    val md = Seq("# second take", "# first take")
     val df = spark.sparkContext.parallelize(md.map(("One Shared Headline", _)), 2)
       .toDF("headline", "md")
     assert(df.rdd.glom().collect().map(_.length).toSeq == Seq(1, 1))
@@ -50,7 +51,7 @@ class SinksSpec extends SparkSpec {
     val files = slugDirs.head.listFiles().filter(f => f.isFile && !f.getName.startsWith("."))
     assert(files.length == 1, s"one slug must land in one file, got ${files.toSeq}")
     val lines = scala.io.Source.fromFile(files.head, "UTF-8")
-    try assert(lines.getLines().toSet == md.toSet) finally lines.close()
+    try assert(lines.getLines().toSeq == md.sorted) finally lines.close()
   }
 
   test("quality stats mirror the reference fields (zara_hybrid_etl.py:233-239)") {
